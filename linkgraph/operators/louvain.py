@@ -57,11 +57,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from linkgraph.plans import local
 from linkgraph.plans.ranks import dense_ids
 from linkgraph.plans.superstep import barrier, release
+
+# louvain()'s default limits (the driver-held IncrementalStream runs
+# with them too)
+MAX_ROUNDS_PER_LEVEL = 100
+MAX_LEVELS = 20
 
 
 @dataclass
@@ -260,6 +267,35 @@ def _q_from_aggregates(
     e_own = float(row["eo"] or 0.0) + self_total
     tot_sq = float(row["ts"] or 0.0)
     return e_own / (2.0 * m) - tot_sq / (4.0 * m * m), e_own
+
+
+def partition_modularity(edges: DataFrame, partition: DataFrame) -> float:
+    """Q of a partition (id, community) over a symmetric weighted edge
+    table — the loop's e_own/(2M) - Σ tot²/(4M²); 0.0 for an edgeless
+    graph. Two scalar actions; for a partition no Louvain run scored
+    (a phase whose delta-screening frontier is empty)."""
+    def labels(end: str, col: str) -> DataFrame:
+        return partition.select(
+            F.col("id").alias(end), F.col("community").cast("long").alias(col)
+        )
+
+    e = (
+        _normalize(edges)
+        .join(labels("src", "cs"), "src")
+        .join(labels("dst", "cd"), "dst")
+    )
+    intra = F.when(F.col("cs") == F.col("cd"), F.col("weight")).otherwise(0.0)
+    row = e.agg(F.sum("weight").alias("tw"), F.sum(intra).alias("eo")).first()
+    m = float(row["tw"] or 0.0) / 2.0
+    if m == 0.0:
+        return 0.0
+    tot_sq = (
+        e.groupBy("cs")
+        .agg(F.sum("weight").alias("tot"))
+        .agg(F.sum(F.col("tot") * F.col("tot")))
+        .first()[0]
+    )
+    return float(row["eo"]) / (2.0 * m) - float(tot_sq or 0.0) / (4.0 * m * m)
 
 
 def _apply_moves(
@@ -503,8 +539,7 @@ def _dense_communities(
 def _louvain_full_local(
     spark: SparkSession,
     e: DataFrame,
-    verts: DataFrame,
-    n: int,
+    vertices: DataFrame | None,
     m: float,
     min_gain: float,
     max_rounds: int,
@@ -519,68 +554,58 @@ def _louvain_full_local(
     full-local fast path's plumbing: Arrow collects in, two Arrow
     createDataFrames out (ONE hierarchy frame instead of a per-level
     union — the per-level createDataFrame chain measured ~2s of pure
-    driver serialization at 11 levels). Labels/hierarchy/Q/levels/
-    metrics identical to the distributed loop (equivalence-tested)."""
-    import pandas as pd
-
+    driver serialization at 11 levels). The vertex set is the edge
+    endpoints plus ``vertices`` — no second run of the caller's
+    distinct. Labels/hierarchy/Q/levels/metrics identical to the
+    distributed loop (equivalence-tested)."""
     from linkgraph.operators.louvain_local import run_local_complete
 
-    epdf = e.select("src", "dst", "weight").toPandas()
-    edge_rows = (
-        epdf["src"].to_numpy(), epdf["dst"].to_numpy(), epdf["weight"].to_numpy()
-    )
-    init_map = None
+    def ids_of(df: DataFrame) -> np.ndarray:
+        return df.select(F.col("id").cast("long")).toPandas()["id"].to_numpy(np.int64)
+
+    src, dst, w = local.collect_edges(e)
+    init = None
     if init_partition is not None:
         ipdf = init_partition.select(
             F.col("id").cast("long").alias("id"),
             F.col("community").cast("long").alias("community"),
         ).toPandas()
-        raw_init = dict(
-            zip((int(i) for i in ipdf["id"]), (int(c) for c in ipdf["community"]))
-        )
-        if vertices_exact:
-            # vertices_exact contract: init covers the vertex set
-            # exactly — it IS the vertex list (skips one collect)
-            vert_ids = list(raw_init)
-            init_map = raw_init
-        else:
-            vert_ids = [int(v) for v in verts.toPandas()["id"]]
+        iid = ipdf["id"].to_numpy(np.int64)
+        ic = ipdf["community"].to_numpy(np.int64)
+    if init_partition is not None and vertices_exact:
+        # vertices_exact contract: init covers the vertex set exactly —
+        # it IS the vertex list (skips one collect)
+        vert_ids = iid
+        init = (iid, ic)
+    else:
+        parts = [src, dst] + ([ids_of(vertices)] if vertices is not None else [])
+        vert_ids = np.unique(np.concatenate(parts))
+        if init_partition is not None:
             # fallback labels offset past max(init community) — the
             # distributed loop's coalesce(community, id + offset)
-            max_c = max(raw_init.values()) if raw_init else None
-            offset = int(max_c) + 1 if max_c is not None else 0
-            init_map = {
-                v: raw_init.get(v, v + offset) for v in vert_ids
-            }
-    else:
-        vert_ids = [int(v) for v in verts.toPandas()["id"]]
-    fr_ids = (
-        [int(v) for v in frontier.select("id").toPandas()["id"]]
-        if frontier is not None
-        else None
-    )
-    hier_levels, amap, q_final, levels_done, m_local = run_local_complete(
-        edge_rows, vert_ids, m, min_gain, max_rounds, max_levels,
-        init=init_map, frontier=fr_ids, force=init_partition is not None,
+            offset = int(ic.max()) + 1 if len(ic) else 0
+            order = np.argsort(iid, kind="stable")
+            pos, hit = local.index_of(iid[order], vert_ids)
+            labels = vert_ids + offset
+            labels[hit] = ic[order][pos[hit]]
+            init = (vert_ids, labels)
+    hier_levels, (ids, comm), q_final, levels_done, m_local = run_local_complete(
+        (src, dst, w), vert_ids, m, min_gain, max_rounds, max_levels,
+        init=init,
+        frontier=ids_of(frontier) if frontier is not None else None,
+        force=init_partition is not None,
     )
     metrics.extend(m_local)
-    hier_pdf = pd.DataFrame(
-        [
-            (lvl, nd, c)
-            for lvl, dmap in hier_levels
-            for nd, c in dmap.items()
-        ],
-        columns=["level", "node", "community"],
+    hierarchy = local.frame(
+        spark, "level int, node long, community long",
+        level=np.concatenate(
+            [np.full(len(nodes), lvl, dtype=np.int32) for lvl, nodes, _ in hier_levels]
+        ),
+        node=np.concatenate([nodes for _, nodes, _ in hier_levels]),
+        community=np.concatenate([dense for _, _, dense in hier_levels]),
     )
-    hierarchy = spark.createDataFrame(
-        hier_pdf.astype({"level": "int32", "node": "int64", "community": "int64"}),
-        schema="level int, node long, community long",
-    )
-    assign_pdf = pd.DataFrame(
-        list(amap.items()), columns=["id", "community"]
-    ).astype({"id": "int64", "community": "int64"})
-    assignment = spark.createDataFrame(
-        assign_pdf, schema="id long, community long"
+    assignment = local.frame(
+        spark, "id long, community long", id=ids, community=comm
     )
     return LouvainResult(
         assignment=assignment,
@@ -595,8 +620,8 @@ def louvain(
     spark: SparkSession,
     edges: DataFrame,
     min_gain: float = 1e-6,
-    max_rounds_per_level: int = 100,
-    max_levels: int = 20,
+    max_rounds_per_level: int = MAX_ROUNDS_PER_LEVEL,
+    max_levels: int = MAX_LEVELS,
     init_partition: DataFrame | None = None,
     frontier: DataFrame | None = None,
     vertices: DataFrame | None = None,
@@ -606,8 +631,8 @@ def louvain(
     salt_hubs: bool | None = None,
     hub_degree_threshold: int = 1_000_000,
     pre_partitioned: bool = False,
-    local_threshold: int = 50_000,
-    local_edge_cap: int = 5_000_000,
+    local_threshold: int | None = None,
+    local_edge_cap: int | None = None,
 ) -> LouvainResult:
     """Run multi-level Louvain on a symmetric weighted edge table
     (both directions present, self-loops once — graph.build.build_graph
@@ -646,7 +671,8 @@ def louvain(
     frontiers included — run_local_complete replays both exactly)
     when the INPUT graph is already under the guards, and otherwise
     to the first post-contraction quotient that fits. 0 disables
-    (pure distributed — the plan-audit configuration).
+    (pure distributed — the plan-audit configuration); None (default)
+    reads the small-graph guard in plans/local.py (50,000 vertices).
     local_edge_cap: second fast-path guard — the quotient must also
     have at most this many edge ROWS before it is collected (a 50k-
     supernode quotient of a 100-TB graph can still carry hundreds of
@@ -654,6 +680,7 @@ def louvain(
     bound the collect). The row count is one cheap job over the
     already-materialized quotient; over the cap the level runs
     distributed and the guard re-checks after the next contraction.
+    None (default) reads plans/local.py (5,000,000 rows).
     """
     # pre_partitioned inputs are already materialized by the caller
     # (a persisted bucketed-table read, or the incremental loop's
@@ -738,12 +765,7 @@ def louvain(
             levels=0, metrics=metrics,
         )
 
-    if (
-        small
-        and local_threshold > 0
-        and n <= local_threshold
-        and n_edge_rows <= local_edge_cap
-    ):
+    if small and local.fits(n, n_edge_rows, local_threshold, local_edge_cap):
         # full-local fast path (level 0 included): the doubly-guarded
         # collect (vertex threshold AND edge-row cap — the same guards
         # as the post-contraction fast path below) runs the ENTIRE
@@ -757,7 +779,7 @@ def louvain(
         # (tests/test_louvain.py fast-path equivalence suite). Over
         # either guard the distributed path below runs unchanged.
         res = _louvain_full_local(
-            spark, e, verts, n, m, min_gain, max_rounds_per_level,
+            spark, e, vertices, m, min_gain, max_rounds_per_level,
             max_levels, init_partition, frontier,
             vertices_exact=vertices is not None and vertices_exact,
             metrics=metrics,
@@ -823,13 +845,10 @@ def louvain(
     n_nodes = n
     next_self: float | None = self_total0
     for level in range(max_levels):
-        if (
-            level > 0
-            and local_threshold > 0
-            and n_nodes <= local_threshold
-            # edge-row guard: the quotient is a materialized barrier,
-            # so this count is one cheap job; see local_edge_cap doc
-            and cur_edges.count() <= local_edge_cap
+        # edge-row guard: the quotient is a materialized barrier, so
+        # its count is one cheap job; see local_edge_cap doc
+        if level > 0 and local.fits(
+            n_nodes, cur_edges, local_threshold, local_edge_cap
         ):
             # small-quotient fast path: post-contraction levels start
             # from singletons with no frontier, so the collected
@@ -837,10 +856,9 @@ def louvain(
             # invariant) fully determines the rest of the run
             from linkgraph.operators.louvain_local import run_local_levels
 
-            rows = cur_edges.select("src", "dst", "weight").collect()
             level_maps, q_final, lv_local, m_local = run_local_levels(
-                rows, n_nodes, m, min_gain, max_rounds_per_level,
-                max_levels - level, level,
+                local.collect_edges(cur_edges), n_nodes, m, min_gain,
+                max_rounds_per_level, max_levels - level, level,
             )
             metrics.extend(m_local)
             levels_done = level + lv_local

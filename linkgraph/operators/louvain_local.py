@@ -28,34 +28,34 @@ from __future__ import annotations
 
 import numpy as np
 
+from linkgraph.plans.local import index_of
 
-def _edge_arrays(edge_rows):
-    """(src, dst, weight) int64/int64/float64 arrays from either a
-    (src_array, dst_array, weight_array) triple (the zero-copy caller
-    path) or any iterable of row triples (lists, collected Rows)."""
-    if (
-        isinstance(edge_rows, tuple)
-        and len(edge_rows) == 3
-        and hasattr(edge_rows[0], "dtype")
-    ):
-        return (
-            np.asarray(edge_rows[0], dtype=np.int64),
-            np.asarray(edge_rows[1], dtype=np.int64),
-            np.asarray(edge_rows[2], dtype=np.float64),
-        )
-    rows = edge_rows if isinstance(edge_rows, (list, tuple)) else list(edge_rows)
-    if not rows:
-        return (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.float64),
-        )
-    arr = np.asarray(rows, dtype=np.float64)
+
+def _edge_arrays(edges):
+    """(src, dst, weight) int64/int64/float64 arrays from a
+    (src, dst, weight) array triple (plans/local.collect_edges)."""
+    src, dst, w = edges
     return (
-        arr[:, 0].astype(np.int64),
-        arr[:, 1].astype(np.int64),
-        arr[:, 2].astype(np.float64),
+        np.asarray(src, dtype=np.int64),
+        np.asarray(dst, dtype=np.int64),
+        np.asarray(w, dtype=np.float64),
     )
+
+
+def modularity(edges, ids, comm) -> float:
+    """Q of the partition (``ids`` ascending, ``comm``) over symmetric
+    edge arrays — the level loop's e_own/(2M) - Σ tot²/(4M²), self-loops
+    counted once as intra-community weight; 0.0 for an edgeless graph
+    (louvain()'s convention)."""
+    src, dst, w = _edge_arrays(edges)
+    m = float(w.sum()) / 2.0
+    if m == 0.0:
+        return 0.0
+    cs = comm[np.searchsorted(ids, src)]
+    _, cidx = np.unique(cs, return_inverse=True)
+    tot = np.bincount(cidx, weights=w)
+    e_own = float(w[cs == comm[np.searchsorted(ids, dst)]].sum())
+    return e_own / (2.0 * m) - float((tot * tot).sum()) / (4.0 * m * m)
 
 
 def _one_level_np(
@@ -204,47 +204,53 @@ def run_local_complete(
 ):
     """The ENTIRE louvain() level loop on the driver — level 0
     included — for graphs under the guarded collect thresholds
-    (operators/louvain.py's full-local fast path). Mirrors the
-    distributed loop statement by statement: warm-start level 0
-    (``init``: (id, community) pairs; ``force`` = the gpulouvain
+    (operators/louvain.py's full-local fast path and the driver-local
+    IncrementalStream). Mirrors the distributed loop statement by
+    statement: warm-start level 0 (``init``; ``force`` = the gpulouvain
     onceMore flag that forces contraction + a second level),
     delta-screening frontier restricted to level 0, per-level
-    hierarchy maps, identity-contraction stop, and the degenerate
-    no-improvement path. Vertex ids are ARBITRARY longs at level 0
-    (no dense-input assumption — unlike ``run_local_levels``, which
-    requires the contraction invariant).
+    hierarchy maps, identity-contraction stop, the degenerate
+    no-improvement path, and the edgeless graph (every vertex its own
+    dense community, Q = 0, no level run). Vertex ids are ARBITRARY
+    longs at level 0 (no dense-input assumption — unlike
+    ``run_local_levels``, which requires the contraction invariant).
 
-    Returns (hierarchy_levels, assignment, q_final, levels_done,
-    metrics): hierarchy_levels = [(level, dict node -> dense cid)...] —
-    the same rows the distributed loop appends per level — and
-    assignment = {original id -> final dense community}.
+    vert_ids: array of the vertex ids (any order; must cover every
+    edge endpoint). init: None or an (ids, communities) array pair
+    covering ``vert_ids``. frontier: None or an array of ids; ids
+    outside the vertex set are dropped (the distributed semi-join's
+    behavior).
+
+    Returns (hierarchy_levels, (ids, communities), q_final,
+    levels_done, metrics): hierarchy_levels = [(level, nodes, dense)...]
+    — the same rows the distributed loop appends per level — and
+    (ids, communities) = the ascending original ids with their final
+    dense community.
     """
     us, vs, ws = _edge_arrays(edge_rows)
-    ids = np.asarray(list(vert_ids), dtype=np.int64)
-    sorted_ids = np.sort(ids)
-    n = len(ids)
+    sorted_ids = np.unique(np.asarray(vert_ids, dtype=np.int64))
+    n = len(sorted_ids)
+    if m == 0.0:
+        dense = np.arange(n, dtype=np.int64)
+        return [(0, sorted_ids, dense)], (sorted_ids, dense), 0.0, 0, []
     # dense index of every level-0 vertex / edge endpoint
     ui = np.searchsorted(sorted_ids, us)
     vi = np.searchsorted(sorted_ids, vs)
     init_labels = None
     if init is not None:
-        imap = dict(init) if not isinstance(init, dict) else init
-        init_labels = np.fromiter(
-            (imap[int(i)] for i in sorted_ids), dtype=np.int64, count=n
-        )
+        iid = np.asarray(init[0], dtype=np.int64)
+        order = np.argsort(iid, kind="stable")
+        pos, hit = index_of(iid[order], sorted_ids)
+        if not hit.all():
+            raise ValueError("init does not cover the vertex set")
+        init_labels = np.asarray(init[1], dtype=np.int64)[order][pos]
     move_mask = None
     if frontier is not None:
-        # frontier ids outside the vertex set are simply dropped — the
-        # distributed semi-join's behavior
-        fr = np.asarray(sorted(set(int(x) for x in frontier)), dtype=np.int64)
-        pos = np.searchsorted(sorted_ids, fr)
-        ok = pos < n
-        pos, frv = pos[ok], fr[ok]
-        hit = sorted_ids[pos] == frv
+        pos, hit = index_of(sorted_ids, np.asarray(frontier, dtype=np.int64))
         move_mask = np.zeros(n, dtype=bool)
         move_mask[pos[hit]] = True
     metrics: list[dict] = []
-    hierarchy_levels: list[tuple[int, dict[int, int]]] = []
+    hierarchy_levels: list[tuple[int, np.ndarray, np.ndarray]] = []
     # current node-id domain of the level (level 0: original ids)
     level_ids = sorted_ids
     # assignment carried over ORIGINAL vertices as dense indices into
@@ -266,9 +272,7 @@ def run_local_complete(
         force_more = False
         comms, dense = np.unique(state, return_inverse=True)
         dense = dense.astype(np.int64)
-        hierarchy_levels.append(
-            (level, dict(zip(level_ids.tolist(), dense.tolist())))
-        )
+        hierarchy_levels.append((level, level_ids, dense))
         assign_idx = dense[assign_idx]
         if len(comms) == cur_n:
             break  # identity contraction: the next level cannot differ
@@ -283,12 +287,9 @@ def run_local_complete(
         # the unmoved state, as the distributed loop does)
         comms, dense = np.unique(state, return_inverse=True)
         dense = dense.astype(np.int64)
-        hierarchy_levels.append(
-            (0, dict(zip(level_ids.tolist(), dense.tolist())))
-        )
+        hierarchy_levels.append((0, level_ids, dense))
         assign_idx = dense[assign_idx]
-    assignment = dict(zip(sorted_ids.tolist(), assign_idx.tolist()))
-    return hierarchy_levels, assignment, q_final, levels_done, metrics
+    return hierarchy_levels, (sorted_ids, assign_idx), q_final, levels_done, metrics
 
 
 def run_local_levels(
@@ -303,7 +304,7 @@ def run_local_levels(
     """Finish the level loop on a collected quotient graph whose
     vertex ids are dense 0..n_nodes-1 (the contraction invariant).
 
-    edge_rows: iterable of (src, dst, weight) — the symmetric quotient
+    edge_rows: (src, dst, weight) arrays — the symmetric quotient
     table with its self-loop diagonal. Returns (level_maps, q_final,
     levels_done, metrics): level_maps is one dict {node -> dense cid}
     per RECORDED level (the same levels the distributed loop would

@@ -50,6 +50,7 @@ from linkgraph.functions.quality import (
 )
 from linkgraph.graph.hierarchy import add_selfloops, contract_graph
 from linkgraph.operators.louvain import _dense_communities, _k_table
+from linkgraph.plans import local
 from linkgraph.plans.superstep import barrier, release
 
 
@@ -278,8 +279,8 @@ def louvain_generalized(
     max_levels: int = 10,
     broadcast_threshold: int = 5_000_000,
     pre_partitioned: bool = False,
-    local_threshold: int = 50_000,
-    local_edge_cap: int = 5_000_000,
+    local_threshold: int | None = None,
+    local_edge_cap: int | None = None,
 ) -> GeneralizedLouvainResult:
     """Multi-level Louvain under quality function ``quality_id`` (0-9,
     the reference's -q ids). Level-0 preprocessing (self-loop injection
@@ -302,7 +303,8 @@ def louvain_generalized(
     metrics identical for the integer-weight ids, tested; ids 4/7 land
     inside the distributed path's own float-order ULP envelope, see
     that module's docstring). 0 disables (pure distributed — the
-    plan-audit configuration). Level 0 always runs distributed."""
+    plan-audit configuration); None (default) reads the small-graph
+    guard in plans/local.py. Level 0 always runs distributed."""
     params = dict(params or {})
     e = edges.select(
         F.col("src").cast("long"),
@@ -367,13 +369,10 @@ def louvain_generalized(
     n_nodes = int(n)  # per-level vertex count, updated by contraction
     q_final = 0.0
     for level in range(max_levels):
-        if (
-            level > 0
-            and local_threshold > 0
-            and n_nodes <= local_threshold
-            # edge-row guard: the quotient is a materialized barrier,
-            # so this count is one cheap job (id-0 local_edge_cap doc)
-            and cur_edges.count() <= local_edge_cap
+        # edge-row guard: the quotient is a materialized barrier, so
+        # its count is one cheap job (id-0 local_edge_cap doc)
+        if level > 0 and local.fits(
+            n_nodes, cur_edges, local_threshold, local_edge_cap
         ):
             # small-quotient fast path: post-contraction levels start
             # from singletons, so the collected quotient (dense ids

@@ -37,10 +37,58 @@ from __future__ import annotations
 import math
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from linkgraph.plans import local
 from linkgraph.plans.superstep import SuperstepRunner
+
+
+def _pagerank_local(
+    spark: SparkSession,
+    arrays,
+    damping: float,
+    tol: float,
+    max_iter: int,
+    chain: int | str,
+    runner: SuperstepRunner | None,
+) -> DataFrame:
+    """The distributed recurrence on driver-held arrays: the same
+    weighted transition p = w / out_w(src), the same uniform dangling
+    redistribution and base term, one metrics row per superstep of
+    ``chain`` iterations (1 unless an integer chain is given) with the
+    convergence test on the superstep's last iteration pair."""
+    src, dst, w = arrays
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(ids)
+    si, di = inv[: len(src)], inv[len(src):]
+    out_w = np.bincount(si, weights=w, minlength=n)
+    dangling = np.bincount(si, minlength=n) == 0
+    p = w / out_w[si]
+    k = max(1, chain) if isinstance(chain, int) else 1
+    score = np.full(n, 1.0 / n)
+    for i in range(max_iter):
+        t0 = time.perf_counter()
+        for _ in range(k):
+            old = score
+            base = (1.0 - damping) / n + damping * float(old[dangling].sum()) / n
+            score = base + damping * np.bincount(di, weights=old[si] * p, minlength=n)
+        delta = float(np.max(np.abs(score - old)))
+        converged = delta < tol
+        if runner is not None:
+            runner.metrics.append(
+                {
+                    "run_id": runner.run_id,
+                    "superstep": i,
+                    "seconds": time.perf_counter() - t0,
+                    "delta": delta,
+                    "converged": converged,
+                }
+            )
+        if converged:
+            break
+    return local.frame(spark, "id long, score double", id=ids, score=score)
 
 
 def pagerank(
@@ -67,6 +115,19 @@ def pagerank(
     out-edges) redistribute their mass uniformly — the standard
     formulation, matched exactly by the NumPy oracle in tests.
     Returns (id:long, score:double).
+
+    Tier: a graph within the small-graph guard of ``plans/local.py``
+    (at most 50,000 vertices AND at most 5,000,000 edge rows, both
+    read off the one vertex-count aggregation) is collected to the
+    driver once and iterated in NumPy — the same recurrence, scores
+    allclose 1e-6 to the distributed plan, the same iteration count,
+    one ``runner.metrics`` row per superstep. Above the guard, or when
+    the runner (or ``checkpoint_dir``) asks for durable checkpoints,
+    the distributed superstep plan below runs: resuming from a
+    checkpoint is what such a caller asked for. The planning knobs
+    (salt_hubs, pre_partitioned, broadcast_threshold, chain="auto")
+    only shape the distributed plan; an integer chain is honored by
+    both tiers.
 
     salt_hubs: None (default) probes max in-degree once per call (one
     scan + agg, amortized over the iteration) and turns the salted
@@ -119,16 +180,25 @@ def pagerank(
     per-iteration schedule is the right default there; pass an
     explicit integer chain to override.
     """
-    edges = edges.select(
-        F.col("src").cast("long"), F.col("dst").cast("long"),
-        F.coalesce(F.col("weight"), F.lit(1.0)).cast("double").alias("weight"),
-    )
+    if isinstance(chain, str) and chain != "auto":
+        raise ValueError(f"chain must be an int or 'auto', got {chain!r}")
+    edges = local.normalized(edges)
+    n, n_rows = local.graph_size(edges)
+    if n == 0:
+        return spark.createDataFrame([], "id long, score double")
+    ckpt = runner.checkpoint_dir if runner is not None else checkpoint_dir
+    if not ckpt and local.fits(n, n_rows):
+        return _pagerank_local(
+            spark, local.collect_edges(edges), damping, tol,
+            runner.max_iter if runner is not None else max_iter,
+            chain, runner,
+        )
+
     verts = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
     # normalized transition weights — computed once, hash-partitioned on
@@ -139,9 +209,6 @@ def pagerank(
     if not pre_partitioned:
         edges_norm = edges_norm.repartition(n_part, "src")
     edges_norm = edges_norm.persist()
-    n = verts.count()  # also materializes verts
-    if n == 0:
-        return spark.createDataFrame([], "id long, score double")
     if salt_hubs is None:
         # two-term probe (VERDICT r3 #9): degree alone over-triggers —
         # map-side partial aggregation already absorbs moderate hubs,
@@ -161,8 +228,6 @@ def pagerank(
             max_in > hub_degree_threshold and max_in > rows_per_reducer / 4.0
         )
 
-    if isinstance(chain, str) and chain != "auto":
-        raise ValueError(f"chain must be an int or 'auto', got {chain!r}")
     auto = isinstance(chain, str) and tol > 0.0
     chain_fixed = 1 if isinstance(chain, str) else max(1, chain)
 

@@ -38,12 +38,15 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
-# localCheckpoint leaks its backing RDD in the context's persistent-RDD
-# registry (DataFrame.unpersist does NOT free it) — over hundreds of
-# supersteps that is an executor-memory leak causing GC spikes. barrier()
-# records the RDD ids each checkpoint creates; release() frees them when
-# the state is superseded.
-_BARRIER_RDDS: dict[int, list] = {}
+# localCheckpoint leaves its backing RDD persisted (DataFrame.unpersist
+# does NOT free it) — over hundreds of supersteps that is an
+# executor-memory leak causing GC spikes. barrier() keeps the handle of
+# the RDD each checkpoint creates ON the returned frame; release() frees
+# it eagerly when the state is superseded. A frame dropped without
+# release() takes its handle with it: no module state outlives the
+# frame, and Spark's ContextCleaner may unpersist the blocks once the
+# plan is unreachable.
+_RDDS_ATTR = "_barrier_rdds"
 
 
 def barrier(
@@ -132,17 +135,18 @@ def barrier(
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
         out = DataFrame(new_jdf, spark)
-    _BARRIER_RDDS[id(out)] = created
+    setattr(out, _RDDS_ATTR, created)
     return out
 
 
 def release(df: DataFrame) -> None:
     """Free the executor blocks of a superseded barriered state."""
-    for jrdd in _BARRIER_RDDS.pop(id(df), []):
+    for jrdd in getattr(df, _RDDS_ATTR, ()):
         try:
             jrdd.unpersist(False)
         except Exception:
             pass
+    setattr(df, _RDDS_ATTR, ())
     try:
         df.unpersist()
     except Exception:

@@ -13,9 +13,11 @@ semantics: adding an existing edge accumulates its weight.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkgraph.plans.local import index_of
 from linkgraph.plans.ranks import dense_ids
 from linkgraph.plans.superstep import barrier
 
@@ -130,3 +132,71 @@ def seed_new_nodes(
         "id", (F.col("rank") + F.lit(n_comm)).alias("community")
     )
     return barrier(old.unionByName(adopt).unionByName(fresh.select("id", "community")))
+
+
+# ---- the same mutations on driver-held arrays (the local tier) ------
+
+
+def symmetrize_arrays(src, dst, weight=None):
+    """symmetrize_delta on arrays: both directions, self-loops once;
+    a missing weight counts 1.0."""
+    src = np.asarray(src, dtype=np.int64)
+    dst = np.asarray(dst, dtype=np.int64)
+    w = np.ones(len(src)) if weight is None else np.asarray(weight, dtype=np.float64)
+    ns = src != dst
+    return (
+        np.concatenate([src, dst[ns]]),
+        np.concatenate([dst, src[ns]]),
+        np.concatenate([w, w[ns]]),
+    )
+
+
+def delete_arrays(src, dst, w, del_src, del_dst):
+    """apply_deletions on arrays: drop every (src, dst) row whose pair
+    or its reverse is in the batch."""
+    u, v, _ = symmetrize_arrays(del_src, del_dst)
+    gone = set(zip(u.tolist(), v.tolist()))
+    hit = np.flatnonzero(np.isin(src, u))
+    drop = np.zeros(len(src), dtype=bool)
+    drop[hit] = [p in gone for p in zip(src[hit].tolist(), dst[hit].tolist())]
+    keep = ~drop
+    return src[keep], dst[keep], w[keep]
+
+
+def add_arrays(src, dst, w, add_src, add_dst, add_w):
+    """apply_additions on arrays: append the symmetrized batch, then
+    merge duplicate (src, dst) rows by weight sum (rows come out in
+    ascending (src, dst) order)."""
+    u, v, x = symmetrize_arrays(add_src, add_dst, add_w)
+    pairs, inv = np.unique(
+        np.column_stack([np.concatenate([src, u]), np.concatenate([dst, v])]),
+        axis=0, return_inverse=True,
+    )
+    merged = np.bincount(inv.reshape(-1), weights=np.concatenate([w, x]))
+    return pairs[:, 0].copy(), pairs[:, 1].copy(), merged
+
+
+def seed_arrays(src, dst, ids, comm, cand):
+    """seed_new_nodes on arrays. ids/comm: the partition over old
+    nodes, ids ascending; src/dst: the graph after the additions;
+    cand: the batch endpoints (new vertices can only be among them).
+    Degree-1 new nodes whose single neighbor is old adopt its
+    community; the rest get fresh communities max(comm)+1, +2, ... in
+    ascending id order. Returns the extended (ids, comm), ascending."""
+    new = np.setdiff1d(np.asarray(cand, dtype=np.int64), ids)
+    if not len(new):
+        return ids, comm
+    rows = np.flatnonzero(np.isin(src, new))
+    at = np.searchsorted(new, src[rows])  # each row's new node
+    deg = np.bincount(at, minlength=len(new))
+    one = deg[at] == 1
+    pos, hit = index_of(ids, dst[rows[one]])
+    labels = np.zeros(len(new), dtype=np.int64)
+    labels[at[one][hit]] = comm[pos[hit]]
+    fresh = np.ones(len(new), dtype=bool)
+    fresh[at[one][hit]] = False
+    base = int(comm.max()) + 1 if len(comm) else 0
+    labels[fresh] = base + np.arange(int(fresh.sum()), dtype=np.int64)
+    all_ids = np.concatenate([ids, new])
+    order = np.argsort(all_ids, kind="stable")
+    return all_ids[order], np.concatenate([comm, labels])[order]

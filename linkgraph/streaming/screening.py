@@ -27,10 +27,14 @@ and R is only ever used as a semi-join filter afterwards.
 
 from __future__ import annotations
 
+from collections import defaultdict
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from linkgraph.streaming.deltas import symmetrize_delta
+from linkgraph.plans import local
+from linkgraph.streaming.deltas import symmetrize_arrays, symmetrize_delta
 
 
 def _expand(
@@ -44,156 +48,97 @@ def _expand(
     return seeds.unionByName(nbrs).unionByName(members).distinct()
 
 
-def _local_guard(
-    state_n: int, new_edges: DataFrame, local_threshold: int, local_edge_cap: int
-) -> bool:
-    """The louvain-style doubly-guarded collect check: vertex count
-    under the threshold AND edge rows under the cap (the second count
-    is one cheap job over the loop's already-barriered graph version —
-    and only runs once the vertex guard has passed)."""
-    if local_threshold <= 0 or state_n > local_threshold:
-        return False
-    return new_edges.count() <= local_edge_cap
+def _expand_arrays(src, dst, ids, comm, seeds, comms) -> np.ndarray:
+    """_expand on driver-held arrays: seeds, their neighbors, and every
+    member of a marked community, as ascending unique ids."""
+    nbrs = dst[np.isin(src, seeds)]
+    members = ids[np.isin(comm, comms)]
+    return np.unique(np.concatenate([seeds, nbrs, members]).astype(np.int64))
 
 
-def _collect_graph(new_edges: DataFrame, state: DataFrame):
-    """(adjacency dict, state dict, edge-row triples) via Arrow."""
-    epdf = new_edges.select("src", "dst", "weight").toPandas()
-    spdf = state.select("id", "community").toPandas()
-    st = dict(
-        zip((int(i) for i in spdf["id"]), (int(c) for c in spdf["community"]))
-    )
-    return epdf, st
-
-
-def _ids_df(spark: SparkSession, ids) -> DataFrame:
-    import pandas as pd
-
-    if not ids:
-        return spark.createDataFrame([], "id long")
-    return spark.createDataFrame(
-        pd.DataFrame({"id": sorted(ids)}).astype("int64"), schema="id long"
+def frontier_del_arrays(src, dst, ids, comm, del_src, del_dst) -> np.ndarray:
+    """frontier_del on driver-held arrays. src/dst: the graph AFTER the
+    deletions; ids/comm: the previous partition, ids ascending;
+    del_src/del_dst: the deletion batch (symmetrized here). Set
+    semantics only (marks, expansion): no floating point anywhere, so
+    the id set is IDENTICAL to the distributed plan's."""
+    u, v, _ = symmetrize_arrays(del_src, del_dst)
+    if not len(ids):
+        return np.empty(0, dtype=np.int64)
+    pu, hu = local.index_of(ids, u)
+    pv, hv = local.index_of(ids, v)
+    intra = hu & hv & (comm[pu] == comm[pv])
+    return _expand_arrays(
+        src, dst, ids, comm, np.unique(u[intra]), np.unique(comm[pu][intra])
     )
 
 
-def _frontier_del_local(
-    spark: SparkSession,
-    new_edges: DataFrame,
-    state: DataFrame,
-    delta_del: DataFrame,
-) -> DataFrame:
-    """Driver-side replay of frontier_del on a guarded-small graph —
-    set semantics only (marks, expansion): no floating point anywhere,
-    so the returned id set is IDENTICAL to the distributed plan's."""
-    epdf, st = _collect_graph(new_edges, state)
-    dpdf = symmetrize_delta(delta_del).toPandas()
-    seeds: set[int] = set()
-    comms: set[int] = set()
-    for u, v in zip(dpdf["src"], dpdf["dst"]):
-        u, v = int(u), int(v)
-        cu, cv = st.get(u), st.get(v)
-        if cu is not None and cu == cv:
-            seeds.add(u)
-            comms.add(cu)
-    out = set(seeds)
-    if seeds:
-        src_np, dst_np = epdf["src"].to_numpy(), epdf["dst"].to_numpy()
-        for u, v in zip(src_np, dst_np):
-            if int(u) in seeds:
-                out.add(int(v))
-    for vid, c in st.items():
-        if c in comms:
-            out.add(vid)
-    return _ids_df(spark, out)
-
-
-def _frontier_add_local(
-    spark: SparkSession,
-    new_edges: DataFrame,
-    state: DataFrame,
-    delta_add: DataFrame,
-) -> DataFrame:
-    """Driver-side replay of frontier_add on a guarded-small graph.
-
-    The gain arithmetic evaluates the same expression tree as the
-    distributed plan — w/m + k*((tot_cur-k)-tot_c)/(2*m*m) on sums of
-    edge weights that are exact in float64 for integer-valued weights
-    (the louvain local fast path's determinism argument) — so marks,
-    tie-breaks and acceptances are identical."""
-    from collections import defaultdict
-
-    epdf, st = _collect_graph(new_edges, state)
-    src_np = epdf["src"].to_numpy()
-    dst_np = epdf["dst"].to_numpy()
-    w_np = epdf["weight"].to_numpy()
-    m = float(w_np.sum()) / 2.0
+def frontier_add_arrays(src, dst, w, ids, comm, add_src, add_dst) -> np.ndarray:
+    """frontier_add on driver-held arrays (arguments as in
+    frontier_del_arrays; ``ids``/``comm`` already extended to the new
+    nodes). The gain evaluates the distributed plan's expression tree —
+    w/m + k*((tot_cur-k)-tot_c)/(2*m*m) on sums of edge weights that
+    are exact in float64 for integer-valued weights (the louvain local
+    fast path's determinism argument) — so marks, tie-breaks and
+    acceptances are identical."""
+    u, v, _ = symmetrize_arrays(add_src, add_dst)
+    if not len(ids):
+        return np.empty(0, dtype=np.int64)
+    m = float(w.sum()) / 2.0
     denom = 2.0 * m * m
-    dpdf = symmetrize_delta(delta_add).toPandas()
-    sources = set(int(u) for u in dpdf["src"])
-
-    # candidate communities per source: own + the new edges' targets'
-    cands: dict[int, set[int]] = defaultdict(set)
-    for u, v in zip(dpdf["src"], dpdf["dst"]):
-        u, v = int(u), int(v)
-        cv = st.get(v)
-        if cv is not None:
-            cands[u].add(cv)
-    for u in sources:
-        cu = st.get(u)
-        if cu is not None:
-            cands[u].add(cu)
-
-    k = defaultdict(float)
-    for u, w in zip(src_np, w_np):
-        k[int(u)] += w
-    tot = defaultdict(float)
-    size = defaultdict(int)
-    for vid, c in st.items():
-        tot[c] += k[vid]
-        size[c] += 1
-
-    # w_vc restricted to sources (the semi-join) and candidate comms
-    w_vc: dict[int, dict[int, float]] = {u: defaultdict(float) for u in sources}
-    for u, v, w in zip(src_np, dst_np, w_np):
-        u = int(u)
-        if u in sources and u != int(v):
-            cv = st.get(int(v))
-            if cv is not None:
-                w_vc[u][cv] += w
-
-    seeds: set[int] = set()
-    comms_marked: set[int] = set()
-    for u in sources:
-        cur = st.get(u)
-        if cur is None:
-            continue  # inner own-join: sources must be in state
-        ku = k[u]
+    ps, hs = local.index_of(ids, src)
+    k = np.bincount(ps[hs], weights=w[hs], minlength=len(ids))
+    labels, cidx = np.unique(comm, return_inverse=True)
+    tot = dict(zip(labels.tolist(), np.bincount(cidx, weights=k).tolist()))
+    size = dict(zip(labels.tolist(), np.bincount(cidx).tolist()))
+    # candidate communities per source: the new edges' targets' (own
+    # community is never a move target)
+    pv, hv = local.index_of(ids, v)
+    cands = set(zip(u[hv].tolist(), comm[pv[hv]].tolist()))
+    sources = np.unique(u)
+    pso, hso = local.index_of(ids, sources)
+    in_state = sources[hso].tolist()
+    cur_of = dict(zip(in_state, comm[pso[hso]].tolist()))
+    k_of = dict(zip(in_state, k[pso[hso]].tolist()))
+    # w_vc restricted to sources (the semi-join), non-self rows whose
+    # target has a community
+    sel = np.isin(src, sources) & (src != dst)
+    pd_, hd = local.index_of(ids, dst[sel])
+    w_vc: dict[int, dict[int, float]] = defaultdict(lambda: defaultdict(float))
+    for a, c, x in zip(
+        src[sel][hd].tolist(), comm[pd_[hd]].tolist(), w[sel][hd].tolist()
+    ):
+        w_vc[a][c] += x
+    seeds: list[int] = []
+    marked: list[int] = []
+    for a, cur in cur_of.items():
+        ku = k_of[a]
         tot_cur, size_cur = tot[cur], size[cur]
-        cand_set = cands.get(u, ())
         best_g, best_c = None, None
-        for c, w in w_vc[u].items():
-            if c == cur or c not in cand_set:
+        for c, x in w_vc[a].items():
+            if c == cur or (a, c) not in cands:
                 continue
             if not (c < cur or size[c] > 1 or size_cur > 1):
                 continue
-            g = w / m + ku * ((tot_cur - ku) - tot[c]) / denom
+            g = x / m + ku * ((tot_cur - ku) - tot[c]) / denom
             if best_g is None or g > best_g or (g == best_g and c < best_c):
                 best_g, best_c = g, c
-        if best_g is None:
-            continue
-        e_own = w_vc[u].get(cur, 0.0)
-        if best_g - e_own / m > 0.0:
-            seeds.add(u)
-            comms_marked.add(best_c)
-    out = set(seeds)
-    if seeds:
-        for u, v in zip(src_np, dst_np):
-            if int(u) in seeds:
-                out.add(int(v))
-    for vid, c in st.items():
-        if c in comms_marked:
-            out.add(vid)
-    return _ids_df(spark, out)
+        if best_g is not None and best_g - w_vc[a].get(cur, 0.0) / m > 0.0:
+            seeds.append(a)
+            marked.append(best_c)
+    return _expand_arrays(
+        src, dst, ids, comm,
+        np.asarray(seeds, dtype=np.int64), np.asarray(marked, dtype=np.int64),
+    )
+
+
+def _collect_local(new_edges: DataFrame, state: DataFrame, delta: DataFrame):
+    """One collect each of the graph, the partition and the batch:
+    (src, dst, weight, ids, comm, delta_src, delta_dst)."""
+    d_src, d_dst, _ = local.collect_edges(delta)
+    return (
+        *local.collect_edges(new_edges), *local.collect_state(state), d_src, d_dst
+    )
 
 
 def frontier_del(
@@ -201,8 +146,8 @@ def frontier_del(
     new_edges: DataFrame,
     state: DataFrame,
     delta_del: DataFrame,
-    local_threshold: int = 50_000,
-    local_edge_cap: int = 5_000_000,
+    local_threshold: int | None = None,
+    local_edge_cap: int | None = None,
     n_vertices: int | None = None,
 ) -> DataFrame:
     """R for a deletion batch. state = previous partition (id, community);
@@ -212,10 +157,15 @@ def frontier_del(
     louvain full-local guards) the frontier is computed on the driver:
     the deletion side is pure set logic (no arithmetic at all), so the
     R set is identical, and the ~10-stage distributed plan's fixed
-    costs are skipped. local_threshold=0 forces the distributed plan."""
+    costs are skipped. local_threshold=0 forces the distributed plan;
+    None (default) reads the small-graph guard in plans/local.py."""
     n = n_vertices if n_vertices is not None else state.count()
-    if _local_guard(n, new_edges, local_threshold, local_edge_cap):
-        return _frontier_del_local(spark, new_edges, state, delta_del)
+    if local.fits(n, new_edges, local_threshold, local_edge_cap):
+        src, dst, _, ids, comm, d_src, d_dst = _collect_local(
+            new_edges, state, delta_del
+        )
+        r = frontier_del_arrays(src, dst, ids, comm, d_src, d_dst)
+        return local.frame(spark, "id long", id=r)
     sym = symmetrize_delta(delta_del)
     st_s = state.select(F.col("id").alias("sid"), F.col("community").alias("cs"))
     st_d = state.select(F.col("id").alias("did"), F.col("community").alias("cd"))
@@ -235,8 +185,8 @@ def frontier_add(
     state: DataFrame,
     delta_add: DataFrame,
     broadcast_threshold: int = 5_000_000,
-    local_threshold: int = 50_000,
-    local_edge_cap: int = 5_000_000,
+    local_threshold: int | None = None,
+    local_edge_cap: int | None = None,
     n_vertices: int | None = None,
 ) -> DataFrame:
     """R for an addition batch. state = previous partition extended to
@@ -244,14 +194,16 @@ def frontier_add(
     Returns (id).
 
     Under the doubly-guarded thresholds the frontier is computed on
-    the driver (_frontier_add_local — same expression tree, identical
+    the driver (frontier_add_arrays — same expression tree, identical
     marks; the distributed plan pays ~10 stages incl. three broadcast
     builds on the critical path, measured 4-6s of pure fixed cost at
-    bench scale). local_threshold=0 forces the distributed plan."""
+    bench scale). local_threshold=0 forces the distributed plan; None
+    (default) reads the small-graph guard in plans/local.py."""
     st = state.select("id", "community")
     n = n_vertices if n_vertices is not None else st.count()
-    if _local_guard(n, new_edges, local_threshold, local_edge_cap):
-        return _frontier_add_local(spark, new_edges, state, delta_add)
+    if local.fits(n, new_edges, local_threshold, local_edge_cap):
+        r = frontier_add_arrays(*_collect_local(new_edges, state, delta_add))
+        return local.frame(spark, "id long", id=r)
     m = float(new_edges.agg(F.sum("weight")).first()[0] or 0.0) / 2.0
     denom = 2.0 * m * m
     sym = symmetrize_delta(delta_add)

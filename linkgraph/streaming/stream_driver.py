@@ -8,8 +8,10 @@ a landing directory, or Kafka in production — drives
 ``IncrementalStream.process_batch`` exactly once per micro-batch:
 apply deletions, apply additions, seed new nodes, compute the
 delta-screening frontier, and re-run warm-started Louvain on R.
-State (edges + partition) lives in driver-held barriered DataFrames,
-checkpointed durably per batch when a checkpoint dir is given —
+State (edges + partition) lives on the driver: as NumPy arrays while
+the graph fits the small-graph guard, as barriered DataFrames above
+it (see ``IncrementalStream``), checkpointed durably per batch when a
+checkpoint dir is given —
 so a restart resumes from the last completed batch (exactly-once at
 the batch level, the foreachBatch idempotency contract).
 """
@@ -22,16 +24,60 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+import numpy as np
+
+from linkgraph.operators.louvain import (
+    MAX_LEVELS,
+    MAX_ROUNDS_PER_LEVEL,
+    louvain,
+    partition_modularity,
+)
+from linkgraph.operators.louvain_local import modularity, run_local_complete
+from linkgraph.plans import local
 from linkgraph.plans.superstep import barrier
-from linkgraph.streaming.deltas import apply_additions, apply_deletions, seed_new_nodes
+from linkgraph.streaming.deltas import (
+    add_arrays,
+    apply_additions,
+    apply_deletions,
+    delete_arrays,
+    seed_arrays,
+    seed_new_nodes,
+)
 from linkgraph.streaming.incremental import run_incremental  # noqa: F401 (parity anchor)
-from linkgraph.operators.louvain import louvain
-from linkgraph.streaming.screening import frontier_add, frontier_del
+from linkgraph.streaming.screening import (
+    frontier_add,
+    frontier_add_arrays,
+    frontier_del,
+    frontier_del_arrays,
+)
 
 DELTA_SCHEMA = "ts int, op string, src long, dst long, weight double"
 
 
 class IncrementalStream:
+    """Incremental Louvain over a delta stream, one ``process_batch``
+    per micro-batch.
+
+    Tier: a graph within the small-graph guard of ``plans/local.py``
+    (at most 50,000 vertices AND at most 5,000,000 edge rows, both
+    read off one vertex-count aggregation) is held on the driver.
+    Construction collects it once and runs the full-local Louvain
+    (``run_local_complete``); each batch is collected once and its
+    whole phase transition — deletions, additions, new-node
+    seeding, both delta-screening frontiers and the warm-started
+    Louvain — runs on driver-held arrays through the same cores the
+    guarded DataFrame operators use, so labels are identical and
+    modularity agrees to 1e-12 with the distributed path. ``modularity``
+    always scores ``state`` on the current graph, also after a phase
+    whose frontier was empty (partition copied forward). ``state``
+    and ``edges`` are published as lazy frames over those arrays. A
+    graph over the guard runs the distributed path: barriered frames
+    and one Spark plan per phase; a batch that grows a driver-held
+    graph past the guard hands it over to that path for the rest of
+    the stream. A checkpoint dir works on both tiers (the published
+    frames are written per batch and restored at construction).
+    """
+
     def __init__(
         self,
         spark: SparkSession,
@@ -42,13 +88,84 @@ class IncrementalStream:
         self.spark = spark
         self.min_gain = min_gain
         self.checkpoint_dir = checkpoint_dir
-        self.edges = barrier(base_edges.select("src", "dst", "weight"))
-        res = louvain(spark, self.edges, min_gain=min_gain)
-        self.state = barrier(res.assignment)
-        self.modularity = res.modularity
+        # driver-held graph (src, dst, weight, ids, comm) on the local
+        # tier, None on the distributed one
+        self._graph: tuple | None = None
+        if local.fits(*local.graph_size(base_edges)):
+            src, dst, w = local.collect_edges(base_edges)
+            ids = np.unique(np.concatenate([src, dst]))
+            ids, comm, self.modularity = self._louvain(src, dst, w, ids)
+            self._hold(src, dst, w, ids, comm)
+        else:
+            self.edges = barrier(base_edges.select("src", "dst", "weight"))
+            res = louvain(spark, self.edges, min_gain=min_gain)
+            self.state = barrier(res.assignment)
+            self.modularity = res.modularity
         self.batches_done = -1
         if checkpoint_dir:
             self._restore()
+
+    # -- the driver-held graph -------------------------------------------
+    def _louvain(self, src, dst, w, ids, init=None, frontier=None):
+        """louvain() with its default limits on driver-held arrays:
+        (ids, communities, modularity)."""
+        _, (ids, comm), q, _, _ = run_local_complete(
+            (src, dst, w), ids, float(w.sum()) / 2.0, self.min_gain,
+            MAX_ROUNDS_PER_LEVEL, MAX_LEVELS,
+            init=init, frontier=frontier, force=init is not None,
+        )
+        return ids, comm, q
+
+    def _hold(self, src, dst, w, ids, comm) -> None:
+        """Keep the graph on the driver while it fits the guard and
+        publish ``edges`` and ``state`` as lazy frames over it."""
+        self.edges = local.frame(
+            self.spark, local.EDGE_SCHEMA, src=src, dst=dst, weight=w
+        )
+        self.state = local.frame(
+            self.spark, "id long, community long", id=ids, community=comm
+        )
+        fits = local.fits(len(ids), len(src))
+        self._graph = (src, dst, w, ids, comm) if fits else None
+
+    def _process_local(self, batch_df: DataFrame) -> None:
+        """One batch on the driver-held graph: one collect of the
+        batch, then every phase on arrays."""
+        pdf = batch_df.select(
+            F.col("ts").cast("int").alias("ts"),
+            "op",
+            F.col("src").cast("long"),
+            F.col("dst").cast("long"),
+            F.coalesce(F.col("weight"), F.lit(1.0)).cast("double").alias("weight"),
+        ).toPandas()
+        src, dst, w, ids, comm = self._graph
+        for ts in np.unique(pdf["ts"].to_numpy()):
+            for phase in ("del", "add"):
+                rows = pdf[(pdf["ts"] == ts) & (pdf["op"] == phase)]
+                if rows.empty:
+                    continue
+                b_src = rows["src"].to_numpy(dtype=np.int64)
+                b_dst = rows["dst"].to_numpy(dtype=np.int64)
+                if phase == "del":
+                    src, dst, w = delete_arrays(src, dst, w, b_src, b_dst)
+                    r = frontier_del_arrays(src, dst, ids, comm, b_src, b_dst)
+                else:
+                    src, dst, w = add_arrays(
+                        src, dst, w, b_src, b_dst,
+                        rows["weight"].to_numpy(dtype=np.float64),
+                    )
+                    ids, comm = seed_arrays(
+                        src, dst, ids, comm, np.concatenate([b_src, b_dst])
+                    )
+                    r = frontier_add_arrays(src, dst, w, ids, comm, b_src, b_dst)
+                if len(r):
+                    ids, comm, self.modularity = self._louvain(
+                        src, dst, w, ids, init=(ids, comm), frontier=r
+                    )
+                else:
+                    # partition copied forward onto the changed graph
+                    self.modularity = modularity((src, dst, w), ids, comm)
+        self._hold(src, dst, w, ids, comm)
 
     # -- durable state ------------------------------------------------
     def _save(self, batch_id: int) -> None:
@@ -67,8 +184,16 @@ class IncrementalStream:
         with open(mp) as f:
             m = json.load(f)
         base = os.path.join(self.checkpoint_dir, f"batch={m['batch_id']}")
-        self.edges = barrier(self.spark.read.parquet(f"{base}/edges"))
-        self.state = barrier(self.spark.read.parquet(f"{base}/state"))
+        edges = self.spark.read.parquet(f"{base}/edges")
+        state = self.spark.read.parquet(f"{base}/state")
+        # the partition covers the vertex set: its size is the guard's
+        # vertex count
+        if local.fits(state.count(), edges):
+            self._hold(*local.collect_edges(edges), *local.collect_state(state))
+        else:
+            self._graph = None
+            self.edges = barrier(edges)
+            self.state = barrier(state)
         self.modularity = m["modularity"]
         self.batches_done = m["batch_id"]
 
@@ -81,6 +206,14 @@ class IncrementalStream:
         # del-phase then add-phase PER TIMESTEP in ts order
         # (run_incremental's inner loop): an edge added at ts_i and
         # deleted at ts_j > i within the same batch must not survive.
+        if self._graph is not None:
+            self._process_local(batch_df)
+        else:
+            self._process_distributed(batch_df)
+        self.batches_done = batch_id
+        self._save(batch_id)
+
+    def _process_distributed(self, batch_df: DataFrame) -> None:
         ts_list = [
             r.ts for r in batch_df.select("ts").distinct().orderBy("ts").collect()
         ]
@@ -110,9 +243,10 @@ class IncrementalStream:
                 )
                 self.state = barrier(res.assignment)
                 self.modularity = res.modularity
+            else:
+                # partition copied forward onto the changed graph
+                self.modularity = partition_modularity(new_edges, self.state)
             self.edges = new_edges
-        self.batches_done = batch_id
-        self._save(batch_id)
 
     def attach(self, delta_stream: DataFrame, **trigger):
         """Start the streaming query: delta_stream must be a streaming

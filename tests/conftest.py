@@ -14,3 +14,13 @@ def spark():
         extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "2048"},
     )
     yield s
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Force every operator onto its distributed plan: the small-graph
+    guard of plans/local.py at 0 vertices (for tests whose subject is
+    the distributed plan itself)."""
+    import linkgraph.plans.local as local
+
+    monkeypatch.setattr(local, "MAX_VERTICES", 0)

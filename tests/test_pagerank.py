@@ -48,7 +48,7 @@ def test_pagerank_random_graph(spark, seed):
     _assert_allclose(result, pagerank_oracle(edges, tol=1e-9), tol=1e-6)
 
 
-def test_pagerank_salted_matches_plain(spark):
+def test_pagerank_salted_matches_plain(spark, distributed):
     g = build_graph(toy_edges_df(spark))
     plain = {r.id: r.score for r in pagerank(spark, g, tol=1e-9).collect()}
     salted = {r.id: r.score for r in pagerank(spark, g, tol=1e-9, salt_hubs=True).collect()}
@@ -87,7 +87,7 @@ def test_pagerank_metrics_logged(spark):
     assert all(np.isfinite(d) for d in deltas)
 
 
-def test_pagerank_chained_matches_unchained(spark):
+def test_pagerank_chained_matches_unchained(spark, distributed):
     """chain=k (k iterations per materialized barrier) must reproduce
     the per-iteration schedule's scores at the same iteration count —
     both with and without dangling vertices (the dangling case folds
@@ -111,14 +111,14 @@ def test_pagerank_chained_matches_unchained(spark):
         assert len(r3.metrics) == 4  # 4 chains of 3 = 12 iterations
 
 
-def test_pagerank_chained_converges_to_oracle(spark):
+def test_pagerank_chained_converges_to_oracle(spark, distributed):
     g = build_graph(toy_edges_df(spark))
     edges = [(r.src, r.dst, r.weight) for r in g.collect()]
     result = pagerank(spark, g, tol=1e-9, chain=4)
     _assert_allclose(result, pagerank_oracle(edges, tol=1e-9), tol=1e-6)
 
 
-def test_pagerank_auto_chain_converges_like_unchained(spark):
+def test_pagerank_auto_chain_converges_like_unchained(spark, distributed):
     """chain='auto' (the default) must reach the same fixpoint as the
     reference per-iteration schedule: identical convergence criterion,
     scores allclose (auto may execute a few iterations past the

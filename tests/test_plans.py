@@ -390,7 +390,7 @@ def test_barrier_combined_mode_preserves_partitioning_and_resets_stats(spark):
     assert str(stats) != str(inherited)
 
 
-def test_bucketed_k1_layout_no_initial_exchange(spark, tmp_path):
+def test_bucketed_k1_layout_no_initial_exchange(spark, tmp_path, distributed):
     """VERDICT r2 stretch: reading the K1 layout through the catalog's
     bucketing spec drops the per-operator one-time repartition —
     src-keyed aggregation over the table plans ZERO exchanges, the

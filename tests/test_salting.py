@@ -20,7 +20,7 @@ def _hub_graph(spark):
     )
 
 
-def test_pagerank_salted_equals_plain(spark):
+def test_pagerank_salted_equals_plain(spark, distributed):
     raw = _hub_graph(spark)
     plain = {r.id: r.score for r in pagerank(spark, raw, salt_hubs=False).collect()}
     # auto-probe path with a tiny threshold -> salting ON

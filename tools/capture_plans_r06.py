@@ -101,6 +101,16 @@ def hook(df, **kw):
 ss.barrier = hook
 from linkgraph.operators.pagerank import pagerank  # noqa: E402
 
+# a graph this small would run on the driver-local tier, which has no
+# superstep plan: force the distributed tier (trees without a local
+# tier have nothing to force)
+try:
+    import linkgraph.plans.local as tiers  # noqa: E402
+except ImportError:
+    tiers = None
+guard = tiers.MAX_VERTICES if tiers else None
+if tiers:
+    tiers.MAX_VERTICES = 0
 try:
     pagerank(spark, edges, tol=1e-6, pre_partitioned=True, max_iter=3).count()
 finally:
@@ -121,6 +131,8 @@ try:
         raise
 finally:
     ss.barrier = orig_barrier
+    if tiers:
+        tiers.MAX_VERTICES = guard
 if len(captured) >= 3:
     dump("pagerank_superstep_chain4", captured[2])
 
