@@ -536,6 +536,19 @@ def _dense_communities(
     )
 
 
+def hierarchy_frame(spark: SparkSession, hier_levels) -> DataFrame:
+    """run_local_complete's per-level (level, nodes, dense) rows as ONE
+    (level, node, community) frame."""
+    return local.frame(
+        spark, "level int, node long, community long",
+        level=np.concatenate(
+            [np.full(len(nodes), lvl, dtype=np.int32) for lvl, nodes, _ in hier_levels]
+        ),
+        node=np.concatenate([nodes for _, nodes, _ in hier_levels]),
+        community=np.concatenate([dense for _, _, dense in hier_levels]),
+    )
+
+
 def _louvain_full_local(
     spark: SparkSession,
     e: DataFrame,
@@ -596,14 +609,7 @@ def _louvain_full_local(
         force=init_partition is not None,
     )
     metrics.extend(m_local)
-    hierarchy = local.frame(
-        spark, "level int, node long, community long",
-        level=np.concatenate(
-            [np.full(len(nodes), lvl, dtype=np.int32) for lvl, nodes, _ in hier_levels]
-        ),
-        node=np.concatenate([nodes for _, nodes, _ in hier_levels]),
-        community=np.concatenate([dense for _, _, dense in hier_levels]),
-    )
+    hierarchy = hierarchy_frame(spark, hier_levels)
     assignment = local.frame(
         spark, "id long, community long", id=ids, community=comm
     )

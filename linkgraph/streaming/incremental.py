@@ -1,15 +1,8 @@
-"""Per-timestep incremental loop — the reference's specialty
-(src/main_louvain.cpp:1217-1611 / main_louvain_gpu.cpp:1229-1633):
-each timestep applies a deletion batch then an addition batch, each
-phase = mutate graph -> (seed new nodes) -> delta-screening frontier R
--> warm-started Louvain restricted to R (skipped when R is empty,
-copying the partition forward).
-
-The reference's "streaming" is exactly this sequential micro-batch
-loop (SURVEY.md §2.J) — state (edges_vt, n2c) carried across steps; we
-carry (edges DataFrame snapshot, state DataFrame) and persist per-phase
-metrics incl. the headline delta-screening win, R%%
-(src/main_louvain.cpp:1348,1544).
+"""Per-timestep incremental loop — the reference's specialty and its
+"streaming" (src/main_louvain.cpp:1217-1611, SURVEY.md §2.J): each
+timestep a deletion phase then an addition phase, run by
+``stream_driver.run_phase`` on either backend, plus durable per-phase
+sinks (metrics incl. the delta-screening win R%%, resume point, trees).
 """
 
 from __future__ import annotations
@@ -21,14 +14,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from linkgraph.operators.louvain import _normalize, louvain
-from linkgraph.plans.superstep import barrier
-from linkgraph.streaming.deltas import (
-    apply_additions,
-    apply_deletions,
-    seed_new_nodes,
-)
-from linkgraph.streaming.screening import frontier_add, frontier_del
+from linkgraph.streaming import stream_driver as sd
 
 
 @dataclass
@@ -39,131 +25,55 @@ class IncrementalRun:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _persist_metrics(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    phase_row: dict,
-    louvain_metrics: list[dict],
-) -> None:
-    """Durable per-phase metrics (north rule: convergence/delta metrics
-    persisted — the reference prints R%% and per-pass Q to stdout,
-    main_louvain.cpp:1348,1195; we append them to parquet tables under
-    the checkpoint dir, written after EVERY phase so a killed run
-    keeps its history):
-
-    * ``incremental_metrics``: one row per phase incl. the
-      delta-screening win r_frac (R%%);
-    * ``louvain_rounds``: the phase's Louvain per-round Q/gain trail.
-    """
-    spark.createDataFrame(
-        [
-            (
-                int(phase_row["ts"]),
-                str(phase_row["phase"]),
-                int(phase_row["r_size"]),
-                float(phase_row["r_frac"]),
-                float(phase_row["q"]),
-            )
-        ],
-        schema="ts int, phase string, r_size long, r_frac double, q double",
-    ).write.mode("append").parquet(
-        os.path.join(checkpoint_dir, "incremental_metrics")
-    )
-    if louvain_metrics:
-        spark.createDataFrame(
-            [
-                (
-                    int(phase_row["ts"]),
-                    str(phase_row["phase"]),
-                    int(m["level"]),
-                    int(m["round"]),
-                    float(m["q"]),
-                    float(m["gain"]),
-                )
-                for m in louvain_metrics
-                if "round" in m
-            ],
-            schema="ts int, phase string, level int, round int, q double, gain double",
-        ).write.mode("append").parquet(os.path.join(checkpoint_dir, "louvain_rounds"))
-
-
-def _inc_manifest_path(checkpoint_dir: str) -> str:
+def _manifest(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "INCREMENTAL_MANIFEST.json")
 
 
-def _phase_order(ts: int, phase: str) -> tuple[int, int]:
-    """Sortable position of a phase: static < (0,del) < (0,add) < ..."""
-    if phase == "static":
-        return (-(2**31), 0)
-    return (int(ts), 0 if phase == "del" else 1)
-
-
-def _save_phase_state(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    state: DataFrame,
-    ts: int,
-    phase: str,
-    q: float,
-) -> None:
-    """Durable mid-run resume point (north rule "resumable from
-    checkpoint"; the analog of the reference driver's per-step .tree
-    restart files, main_louvain.cpp:1243-1253): the carried partition
-    state (vertex-sized — the edge versions are REPLAYED from the
-    deltas on resume, never checkpointed) plus a manifest recording the
-    last completed (ts, phase) and its modularity. State first,
-    manifest last: a kill between the two resumes from the previous
-    phase."""
-    path = os.path.join(
-        checkpoint_dir, "incremental_state", f"ts={ts}_phase={phase}"
-    )
+def _persist_phase(spark, checkpoint_dir, row: dict, res, state, write_trees) -> None:
+    """Durable record of a completed phase (the reference prints R%% and
+    per-pass Q, main_louvain.cpp:1348,1195, and writes graph{t}.tree,
+    :1243): append the phase row to ``incremental_metrics`` and its
+    Louvain round trail to ``louvain_rounds``; overwrite its dendrogram
+    under ``trees/`` (after an empty frontier, the one-level tree of
+    the carried state); then write the state and, last, the manifest
+    naming it — the resume point (edge versions are replayed from the
+    deltas, never checkpointed)."""
+    ts, phase = int(row["ts"]), row["phase"]
+    spark.createDataFrame(
+        [(ts, phase, int(row["r_size"]), float(row["r_frac"]), float(row["q"]))],
+        "ts int, phase string, r_size long, r_frac double, q double",
+    ).write.mode("append").parquet(os.path.join(checkpoint_dir, "incremental_metrics"))
+    rounds = [
+        (ts, phase, int(m["level"]), int(m["round"]), float(m["q"]), float(m["gain"]))
+        for m in (res.metrics if res else []) if "round" in m
+    ]
+    if rounds:
+        spark.createDataFrame(
+            rounds, "ts int, phase string, level int, round int, q double, gain double"
+        ).write.mode("append").parquet(os.path.join(checkpoint_dir, "louvain_rounds"))
+    key = f"ts={ts}_phase={phase}"
+    if write_trees:
+        tree = res.hierarchy if res else state.select(
+            F.lit(0).alias("level"), F.col("id").alias("node"), "community"
+        )
+        tree.write.mode("overwrite").partitionBy("level").parquet(
+            os.path.join(checkpoint_dir, "trees", key)
+        )
+    path = os.path.join(checkpoint_dir, "incremental_state", key)
     state.write.mode("overwrite").parquet(path)
-    with open(_inc_manifest_path(checkpoint_dir), "w") as f:
-        json.dump({"ts": int(ts), "phase": phase, "state_path": path, "q": q}, f)
+    with open(_manifest(checkpoint_dir), "w") as f:
+        json.dump({"ts": ts, "phase": phase, "state_path": path, "q": row["q"]}, f)
 
 
-def _save_phase_tree(
-    checkpoint_dir: str, hierarchy: DataFrame, ts: int, phase: str
-) -> None:
-    """K2 dendrogram sink for the dynamic loop: the reference driver
-    writes one ``graph{t}.tree`` per timestep (main_louvain.cpp:1243);
-    we persist each phase's hierarchy (level, node, community) under
-    the checkpoint dir, partitioned by level. Overwrite (not append)
-    keyed by (ts, phase) so a resumed run that replays a phase cannot
-    double its rows."""
-    (
-        hierarchy.write.mode("overwrite")
-        .partitionBy("level")
-        .parquet(os.path.join(checkpoint_dir, "trees", f"ts={ts}_phase={phase}"))
-    )
-
-
-def load_tree(
-    spark: SparkSession, checkpoint_dir: str, ts: int, phase: str
-) -> DataFrame:
+def load_tree(spark: SparkSession, checkpoint_dir: str, ts: int, phase: str) -> DataFrame:
     """Read one phase's persisted dendrogram back as
     (level, node, community) — ``flatten_hierarchy`` of this equals the
     phase's carried state (read-back contract, test_dynamic)."""
-    df = spark.read.parquet(
-        os.path.join(checkpoint_dir, "trees", f"ts={ts}_phase={phase}")
-    )
+    df = spark.read.parquet(os.path.join(checkpoint_dir, "trees", f"ts={ts}_phase={phase}"))
     return df.select(
         F.col("level").cast("int"), F.col("node").cast("long"),
         F.col("community").cast("long"),
     )
-
-
-def load_incremental_checkpoint(
-    spark: SparkSession, checkpoint_dir: str
-) -> tuple[DataFrame, int, str, float] | None:
-    """(state, last_ts, last_phase, q) of the last completed phase, or
-    None when no resume point exists."""
-    mp = _inc_manifest_path(checkpoint_dir)
-    if not os.path.exists(mp):
-        return None
-    with open(mp) as f:
-        m = json.load(f)
-    return spark.read.parquet(m["state_path"]), m["ts"], m["phase"], m["q"]
 
 
 def run_incremental(
@@ -181,189 +91,54 @@ def run_incremental(
     write_trees: bool = False,
 ) -> IncrementalRun:
     """base_edges: symmetric weighted table (build_graph output).
-    deltas: (ts:int, op:'add'|'del', src, dst[, weight]).
+    deltas: (ts:int, op:'add'|'del', src, dst[, weight]); a row with
+    another op or a null ts, src or dst raises ValueError. Tier: as
+    ``IncrementalStream`` — within the guard, base graph and deltas are
+    collected once and every phase runs on the driver.
 
-    screening=False is the GPU driver's -f full-re-evaluation mode
-    (main_louvain_gpu.cpp:95-97,946-953): every phase still warm-starts
-    from the carried partition but evaluates ALL vertices (frontier =
-    whole vertex set, R%% = 100) — the natural A/B baseline for the
-    delta-screening win.
-
-    resume=True + checkpoint_dir: a killed run restarts from the last
-    completed phase — the persisted state is reloaded, the edge
-    mutations of completed phases are replayed (cheap anti-join/union
-    chain, no Louvain), and processing continues with the first
-    unfinished phase; the final state and the durable metrics tables
-    are identical to an uninterrupted run (Louvain's determinism note).
-    The in-memory ``metrics`` list covers only the phases this process
-    ran — the durable ``incremental_metrics`` table has the full
-    history.
-
-    broadcast_threshold / salt_hubs forward to every internal louvain
-    call (broadcast_threshold=0 forces the co-partitioned big path —
-    the at-scale evidence runs use it).
-
-    pre_partitioned=True: base_edges is already hash(src)-partitioned
-    (the K1 bucketed-table read) — the loop's one-time repartition is
-    skipped; the invariant below then holds from the first barrier.
-
-    write_trees=True (requires checkpoint_dir): persist each phase's
-    dendrogram under ``<checkpoint_dir>/trees/ts={t}_phase={p}`` — the
-    per-timestep ``graph{t}.tree`` analog (main_louvain.cpp:1243). A
-    phase whose frontier is empty (Louvain skipped, partition copied
-    forward) gets the trivial one-level tree of the carried state, so
-    every (ts, phase) directory exists and flattens to that phase's
-    labels.
+    screening=False: the GPU driver's -f mode (main_louvain_gpu.cpp:946)
+    — R is every vertex (R%% = 100), the A/B baseline for screening.
+    resume=True + checkpoint_dir: a killed run reloads the last
+    completed phase's state, replays the earlier phases' edge mutations
+    (no Louvain) and continues; state and durable tables end equal to
+    an uninterrupted run's (``metrics`` holds this process's phases).
+    broadcast_threshold / salt_hubs go to the distributed louvain calls.
+    pre_partitioned=True: base_edges is already materialized and
+    hash(src)-partitioned (the K1 bucketed read); no repartition.
+    write_trees=True (requires checkpoint_dir): persist every phase's
+    dendrogram under ``<checkpoint_dir>/trees/ts={t}_phase={p}``.
     """
     if write_trees and not checkpoint_dir:
         raise ValueError("write_trees requires checkpoint_dir")
-    # carried-graph invariant: every edge version is normalized,
-    # hash(src)-partitioned at the session partition count, and
-    # materialized — so EVERY louvain call (static and warm) runs
-    # pre_partitioned, skipping its per-call normalize/persist and
-    # repartition barrier (measured ~90s of a 160s warm call at 123M
-    # rows). Deletions preserve the layout through the broadcast
-    # anti-join; additions re-establish it inside the merge
-    # aggregation (apply_additions(repartition_src=...)).
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    versioned = _normalize(base_edges)
-    if pre_partitioned:
-        # the caller's contract (K1 bucketed-table read) already
-        # provides a materialized hash(src)-partitioned source; the
-        # _normalize projection preserves that partitioning, so the
-        # version-0 barrier would only copy the whole graph into
-        # executor memory once more for nothing — every later version
-        # is still barriered after its mutation as before
-        edges = versioned
-    else:
-        edges = barrier(
-            versioned.repartition(n_part, "src"),
-            reset_stats=True,
-            preserve_partitioning=True,
-        )
+    opts = dict(min_gain=min_gain, max_levels=max_levels,
+                broadcast_threshold=broadcast_threshold, salt_hubs=salt_hubs)
+    loaded = None
+    if checkpoint_dir and resume and os.path.exists(_manifest(checkpoint_dir)):
+        with open(_manifest(checkpoint_dir)) as f:
+            loaded = json.load(f)
+    state = loaded and spark.read.parquet(loaded["state_path"])
+    graph = sd.carry(spark, base_edges, state, opts, pre_partitioned)
+    phases = graph.phases(deltas)
     metrics: list[dict] = []
-    resume_pos: tuple[int, int] | None = None
-    q = 0.0
-    state: DataFrame | None = None
-    if checkpoint_dir and resume:
-        loaded = load_incremental_checkpoint(spark, checkpoint_dir)
-        if loaded is not None:
-            st, last_ts, last_phase, q = loaded
-            state = barrier(st.select("id", "community"))
-            resume_pos = _phase_order(last_ts, last_phase)
-    if resume_pos is None:
-        res = louvain(
-            spark, edges, min_gain=min_gain, max_levels=max_levels,
-            broadcast_threshold=broadcast_threshold, salt_hubs=salt_hubs,
-            pre_partitioned=True,
-        )
-        state = barrier(res.assignment)
-        q = res.modularity
-        metrics.append(
-            {"ts": -1, "phase": "static", "r_size": -1, "r_frac": 1.0, "q": q}
-        )
-        if checkpoint_dir:
-            _persist_metrics(spark, checkpoint_dir, metrics[0], res.metrics)
-            _save_phase_state(spark, checkpoint_dir, state, -1, "static", q)
-            if write_trees:
-                _save_phase_tree(checkpoint_dir, res.hierarchy, -1, "static")
 
-    ts_list = [r.ts for r in deltas.select("ts").distinct().orderBy("ts").collect()]
-    for ts in ts_list:
-        for phase in ("del", "add"):
-            batch = deltas.filter((F.col("ts") == ts) & (F.col("op") == phase)).select(
-                "src", "dst", *(["weight"] if "weight" in deltas.columns else [])
-            )
-            if batch.isEmpty():
-                continue
-            if resume_pos is not None and _phase_order(ts, phase) <= resume_pos:
-                # completed before the restart: replay the graph
-                # mutation only (the restored state already reflects
-                # this phase's Louvain pass and any node seeding)
-                if phase == "del":
-                    mutated = apply_deletions(edges, batch)
-                else:
-                    mutated = apply_additions(
-                        edges, batch, repartition_src=n_part
-                    )
-                edges = barrier(
-                    mutated, reset_stats=True, preserve_partitioning=True
-                )
-                continue
-            if phase == "del":
-                new_edges = barrier(
-                    apply_deletions(edges, batch),
-                    reset_stats=True,
-                    preserve_partitioning=True,
-                )
-                verts = state.select("id")
-                r = barrier(
-                    frontier_del(spark, new_edges, state, batch)
-                    if screening
-                    else verts
-                )
-            else:
-                new_edges = barrier(
-                    apply_additions(edges, batch, repartition_src=n_part),
-                    reset_stats=True,
-                    preserve_partitioning=True,
-                )
-                state = seed_new_nodes(spark, new_edges, state, batch=batch)
-                verts = state.select("id")
-                r = barrier(
-                    frontier_add(spark, new_edges, state, batch)
-                    if screening
-                    else verts
-                )
-            n = verts.count()
-            r_size = r.count()
-            phase_louvain: list[dict] = []
-            phase_tree: DataFrame | None = None
-            if r_size > 0:
-                res = louvain(
-                    spark,
-                    new_edges,
-                    min_gain=min_gain,
-                    max_levels=max_levels,
-                    init_partition=state,
-                    frontier=r,
-                    vertices=verts,
-                    # the carried state IS the complete vertex set (the
-                    # del phase only removes edges; the add phase runs
-                    # seed_new_nodes first), so the per-call endpoint
-                    # distinct / count / fallback labeling are skipped
-                    vertices_exact=True,
-                    n_vertices=n,
-                    broadcast_threshold=broadcast_threshold,
-                    salt_hubs=salt_hubs,
-                    pre_partitioned=True,
-                )
-                state = barrier(res.assignment)
-                q = res.modularity
-                phase_louvain = res.metrics
-                phase_tree = res.hierarchy
-            edges = new_edges
-            metrics.append(
-                {
-                    "ts": ts,
-                    "phase": phase,
-                    "r_size": r_size,
-                    "r_frac": r_size / n if n else 0.0,
-                    "q": q,
-                }
-            )
-            if checkpoint_dir:
-                _persist_metrics(spark, checkpoint_dir, metrics[-1], phase_louvain)
-                _save_phase_state(spark, checkpoint_dir, state, ts, phase, q)
-                if write_trees:
-                    if phase_tree is None:
-                        # frontier empty — the partition was copied
-                        # forward; the step's tree is the one-level
-                        # identity of that carried state
-                        phase_tree = state.select(
-                            F.lit(0).alias("level"),
-                            F.col("id").alias("node"),
-                            "community",
-                        )
-                    _save_phase_tree(checkpoint_dir, phase_tree, ts, phase)
-    return IncrementalRun(state=state, edges=edges, modularity=q, metrics=metrics)
+    def done(graph, row: dict, res) -> None:
+        metrics.append(row)
+        if checkpoint_dir:
+            _persist_phase(spark, checkpoint_dir, row, res, graph.state, write_trees)
+
+    if loaded is None:
+        graph, res = graph.louvain()
+        q, last = res.modularity, sd.phase_order(-1, "static")
+        done(graph, {"ts": -1, "phase": "static", "r_size": -1, "r_frac": 1.0, "q": q}, res)
+    else:
+        q, last = loaded["q"], sd.phase_order(loaded["ts"], loaded["phase"])
+    for ts, phase, rows in phases:
+        if sd.phase_order(ts, phase) <= last:
+            # completed before the restart: replay the mutation only
+            # (the restored state reflects its Louvain pass and seeding)
+            graph = graph.apply(phase, rows)
+            continue
+        graph, r_size, q, res = sd.run_phase(graph, phase, rows, screening)
+        r_frac = r_size / graph.n if graph.n else 0.0
+        done(graph, {"ts": ts, "phase": phase, "r_size": r_size, "r_frac": r_frac, "q": q}, res)
+    return IncrementalRun(state=graph.state, edges=graph.edges, modularity=q, metrics=metrics)

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from tests.oracle_louvain import louvain_oracle
+from tests.oracle_louvain import _modularity, louvain_oracle
 
 
 def sym_delta(pairs):
@@ -117,10 +117,24 @@ def frontier_add_o(edges_new, state, adds):
     return _expand_o(edges_new, state, seeds, comms)
 
 
-def run_incremental_o(base_edges, deltas, min_gain=1e-6, max_levels=20):
+def modularity_o(edges, state):
+    """Q of ``state`` over the symmetric graph ``edges``; 0.0 when
+    edgeless."""
+    m = sum(edges.values()) / 2.0
+    if m == 0.0:
+        return 0.0
+    k = defaultdict(float)
+    for (u, _), w in edges.items():
+        k[u] += w
+    return _modularity([(u, v, w) for (u, v), w in edges.items()], state, k, m)
+
+
+def run_incremental_o(base_edges, deltas, min_gain=1e-6, max_levels=20, screening=True):
     """base_edges: {(u,v): w} symmetric. deltas: list of
-    (ts, op, src, dst[, weight]). Returns (state dict, edges dict, q,
-    metrics list)."""
+    (ts, op, src, dst[, weight]). screening=False: every phase's
+    frontier is the whole vertex set. A phase whose frontier is empty
+    copies the partition forward and scores it on the changed graph.
+    Returns (state dict, edges dict, q, metrics list)."""
     edges = dict(base_edges)
     elist = [(u, v, w) for (u, v), w in edges.items()]
     state, q, _ = louvain_oracle(elist, min_gain=min_gain, max_levels=max_levels)
@@ -140,6 +154,8 @@ def run_incremental_o(base_edges, deltas, min_gain=1e-6, max_levels=20):
                 state = seed_new_nodes_o(new_edges, state)
                 verts = sorted(state)
                 r = frontier_add_o(new_edges, state, batch)
+            if not screening:
+                r = set(verts)
             if r:
                 elist = [(u, v, w) for (u, v), w in new_edges.items()]
                 state, q, _ = louvain_oracle(
@@ -150,6 +166,8 @@ def run_incremental_o(base_edges, deltas, min_gain=1e-6, max_levels=20):
                     frontier=r,
                     nodes=verts,
                 )
+            else:
+                q = modularity_o(new_edges, state)
             edges = new_edges
             metrics.append(
                 {

@@ -75,6 +75,46 @@ def test_cli_cc_star_and_louvain_metrics(spark, tmp_path, capsys):
     assert rounds.count() > 0
 
 
+def test_cli_incremental_roundtrip(spark, tmp_path, capsys):
+    """`incremental` on the toy graph and deltas with full
+    re-evaluation, a checkpoint dir and per-phase trees: the printed
+    modularity and metrics and the written state match the dynamic
+    oracle, and trees/ holds one entry per (ts, phase)."""
+    import os
+
+    from tests.fixtures import TOY_DELTAS, toy_deltas_df
+    from tests.oracle_dynamic import run_incremental_o
+
+    g = build_graph(toy_edges_df(spark))
+    edges_path = str(tmp_path / "edges_inc")
+    deltas_path = str(tmp_path / "deltas_inc")
+    g.write.parquet(edges_path)
+    toy_deltas_df(spark).write.parquet(deltas_path)
+    ckpt = tmp_path / "ck_inc"
+    rc = main(
+        ["incremental", "--edges", edges_path, "--deltas", deltas_path,
+         "--output", str(tmp_path / "inc"), "--checkpoint-dir", str(ckpt),
+         "--write-trees", "--no-screening"]
+    )
+    assert rc == 0
+    meta = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    base = {(r.src, r.dst): r.weight for r in g.collect()}
+    want_state, _, want_q, want_m = run_incremental_o(base, TOY_DELTAS, screening=False)
+    assert abs(meta["modularity"] - want_q) < 1e-12
+    keys = ("ts", "phase", "r_size")
+    assert [tuple(m[k] for k in keys) for m in meta["metrics"]] == [
+        tuple(m[k] for k in keys) for m in want_m
+    ]
+    for got, want in zip(meta["metrics"], want_m):
+        assert abs(got["q"] - want["q"]) < 1e-12
+        assert got["r_frac"] == want["r_frac"] == 1.0
+    state = spark.read.parquet(str(tmp_path / "inc" / "state")).collect()
+    assert {r.id: r.community for r in state} == want_state
+    assert sorted(os.listdir(ckpt / "trees")) == sorted(
+        f"ts={m['ts']}_phase={m['phase']}" for m in want_m
+    )
+
+
 def test_cli_build_adjacency_and_table_fed_pagerank(spark, tmp_path, capsys):
     """build-adjacency writes the catalog-known bucketed K1 table; the
     graph commands accept --table and run pre-partitioned, matching

@@ -128,6 +128,10 @@ def test_incremental_run_matches_oracle_end_to_end(spark):
     assert any(f < 1.0 for f in fracs)
 
 
+def test_incremental_run_matches_oracle_end_to_end_distributed(spark, distributed):
+    test_incremental_run_matches_oracle_end_to_end(spark)
+
+
 def test_delta_screening_soundness_vs_full_reeval(spark):
     """R-restricted re-eval reaches the same modularity (within eps) as
     a full re-eval on the toy deltas (SURVEY.md §5.2.3)."""
@@ -163,8 +167,9 @@ def test_incremental_mid_run_resume(spark, tmp_path):
     restarts from the last completed phase's persisted state, replays
     only the completed phases' edge mutations, and ends with the same
     final state, modularity, edge version, and durable metrics history
-    as an uninterrupted run."""
-    import linkgraph.streaming.incremental as inc_mod
+    as an uninterrupted run. The kill hits the shared phase function,
+    which both tiers run."""
+    import linkgraph.streaming.stream_driver as sd
 
     g = build_graph(toy_edges_df(spark))
     full_dir = str(tmp_path / "full")
@@ -172,23 +177,22 @@ def test_incremental_mid_run_resume(spark, tmp_path):
     want_state = sorted((r.id, r.community) for r in full.state.collect())
 
     kill_dir = str(tmp_path / "killed")
-    orig = inc_mod.louvain
-    calls = {"warm": 0}
+    orig = sd.run_phase
+    calls = {"phases": 0}
 
     def bomb(*a, **kw):
-        if kw.get("init_partition") is not None:
-            calls["warm"] += 1
-            if calls["warm"] == 2:
-                raise RuntimeError("simulated kill")
+        calls["phases"] += 1
+        if calls["phases"] == 2:
+            raise RuntimeError("simulated kill")
         return orig(*a, **kw)
 
-    inc_mod.louvain = bomb
+    sd.run_phase = bomb
     try:
         with pytest.raises(RuntimeError, match="simulated kill"):
             run_incremental(spark, g, toy_deltas_df(spark), checkpoint_dir=kill_dir)
     finally:
-        inc_mod.louvain = orig
-    assert calls["warm"] == 2  # the kill actually hit a later phase
+        sd.run_phase = orig
+    assert calls["phases"] == 2  # the kill actually hit a later phase
 
     resumed = run_incremental(spark, g, toy_deltas_df(spark), checkpoint_dir=kill_dir)
     got_state = sorted((r.id, r.community) for r in resumed.state.collect())
@@ -207,11 +211,16 @@ def test_incremental_mid_run_resume(spark, tmp_path):
     assert kill_m == full_m
 
 
-def test_incremental_pre_partitioned_input_matches(spark):
+def test_incremental_mid_run_resume_distributed(spark, tmp_path, distributed):
+    test_incremental_mid_run_resume(spark, tmp_path)
+
+
+def test_incremental_pre_partitioned_input_matches(spark, distributed):
     """run_incremental(pre_partitioned=True) over an already
     hash(src)-partitioned edge table (the K1 bucketed feed) skips the
     loop's one-time repartition and lands the identical final state,
-    edges, modularity, and metrics trail."""
+    edges, modularity, and metrics trail (the distributed tier: the
+    plan under test)."""
     from linkgraph.plans.superstep import barrier
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -268,6 +277,10 @@ def test_incremental_write_trees_readback(spark, tmp_path):
     # write_trees without a checkpoint dir is a contract violation
     with pytest.raises(ValueError, match="checkpoint_dir"):
         run_incremental(spark, g, toy_deltas_df(spark), write_trees=True)
+
+
+def test_incremental_write_trees_readback_distributed(spark, tmp_path, distributed):
+    test_incremental_write_trees_readback(spark, tmp_path)
 
 
 def test_frontier_local_fast_path_identical(spark):

@@ -17,7 +17,13 @@ import linkgraph.plans.local as local
 from linkgraph.graph.build import build_graph
 from linkgraph.operators.pagerank import pagerank
 from linkgraph.plans.superstep import SuperstepRunner, barrier, release
-from linkgraph.streaming.stream_driver import DELTA_SCHEMA, IncrementalStream
+from linkgraph.streaming.incremental import run_incremental
+from linkgraph.streaming.stream_driver import (
+    DELTA_SCHEMA,
+    ArrayGraph,
+    FrameGraph,
+    IncrementalStream,
+)
 from tests.fixtures import TOY_DELTAS, random_edges, toy_deltas_df, toy_edges_df
 from tests.oracle_dynamic import run_incremental_o
 
@@ -173,10 +179,10 @@ def test_stream_local_matches_distributed(spark, monkeypatch, case):
     g = build_graph(toy_edges_df(spark))
     batches = _toy_batches(spark)[case]
     loc, got = _stream_trail(spark, g, batches)
-    assert loc._graph is not None  # the driver-held tier ran
+    assert isinstance(loc.graph, ArrayGraph)  # the driver-held tier ran
     monkeypatch.setattr(local, "MAX_VERTICES", 0)
     dist, want = _stream_trail(spark, g, batches)
-    assert dist._graph is None
+    assert isinstance(dist.graph, FrameGraph)
     _assert_same_trail(got, want)
     def edges(inc):
         return {(r.src, r.dst): r.weight for r in inc.edges.collect()}
@@ -203,7 +209,7 @@ def test_stream_local_matches_distributed_random_batch(spark, monkeypatch):
     ]
     batches = [spark.createDataFrame(batch, DELTA_SCHEMA)]
     loc, got = _stream_trail(spark, g, batches)
-    assert loc._graph is not None
+    assert isinstance(loc.graph, ArrayGraph)
     monkeypatch.setattr(local, "MAX_VERTICES", 0)
     _, want = _stream_trail(spark, g, batches)
     _assert_same_trail(got, want)
@@ -223,14 +229,65 @@ def test_stream_modularity_scores_copied_forward_partition(spark, monkeypatch, g
     inc.process_batch(spark.createDataFrame([(0, "del", 4, 5, 1.0)], DELTA_SCHEMA), 0)
     state = {r.id: r.community for r in inc.state.collect()}
     assert state == before
-    rows = [(r.src, r.dst, r.weight) for r in inc.edges.collect()]
+    assert abs(inc.modularity - _modularity(inc.edges, state)) < 1e-12
+
+
+@pytest.mark.parametrize("guard", [None, 0], ids=["local", "distributed"])
+def test_incremental_modularity_scores_copied_forward_partition(
+    spark, monkeypatch, guard
+):
+    """run_incremental on the same single inter-community deletion:
+    the phase's Q and the run's modularity score the carried partition
+    on the changed graph."""
+    if guard is not None:
+        monkeypatch.setattr(local, "MAX_VERTICES", guard)
+    g = build_graph(toy_edges_df(spark))
+    deltas = spark.createDataFrame([(0, "del", 4, 5, 1.0)], DELTA_SCHEMA)
+    run = run_incremental(spark, g, deltas)
+    assert [m["r_size"] for m in run.metrics] == [-1, 0]
+    q = _modularity(run.edges, {r.id: r.community for r in run.state.collect()})
+    assert abs(run.metrics[-1]["q"] - q) < 1e-12
+    assert abs(run.modularity - q) < 1e-12
+
+
+def _modularity(edges, state) -> float:
+    """Q of ``state`` over a symmetric edge frame, from first principles."""
+    rows = [(r.src, r.dst, r.weight) for r in edges.collect()]
     m2 = sum(w for _, _, w in rows)
     tot: dict[int, float] = {}
     for u, _, w in rows:
         tot[state[u]] = tot.get(state[u], 0.0) + w
     e_in = sum(w for u, v, w in rows if state[u] == state[v])
-    q = e_in / m2 - sum(t * t for t in tot.values()) / (m2 * m2)
-    assert abs(inc.modularity - q) < 1e-12
+    return e_in / m2 - sum(t * t for t in tot.values()) / (m2 * m2)
+
+
+BAD_ROWS = [
+    (0, "upd", 1, 2, 1.0),
+    (None, "add", 1, 2, 1.0),
+    (0, None, 1, 2, 1.0),
+    (0, "add", None, 2, 1.0),
+    (0, "del", 1, None, 1.0),
+]
+
+
+@pytest.mark.parametrize("guard", [None, 0], ids=["local", "distributed"])
+def test_malformed_delta_rows_raise(spark, monkeypatch, guard):
+    """A delta row with an unknown op or a null ts, src or dst is an
+    error on both tiers, in process_batch and in run_incremental — not
+    a row to drop."""
+    if guard is not None:
+        monkeypatch.setattr(local, "MAX_VERTICES", guard)
+    g = build_graph(toy_edges_df(spark))
+    inc = IncrementalStream(spark, g)
+    before = {r.id: r.community for r in inc.state.collect()}
+    for bad in BAD_ROWS:
+        df = spark.createDataFrame([(0, "add", 3, 9, 1.0), bad], DELTA_SCHEMA)
+        with pytest.raises(ValueError, match="1 malformed delta row"):
+            inc.process_batch(df, 0)
+        with pytest.raises(ValueError, match="1 malformed delta row"):
+            run_incremental(spark, g, df)
+    assert inc.batches_done == -1
+    assert {r.id: r.community for r in inc.state.collect()} == before
 
 
 def test_stream_hands_over_when_a_batch_outgrows_the_guard(spark, monkeypatch):
@@ -241,9 +298,9 @@ def test_stream_hands_over_when_a_batch_outgrows_the_guard(spark, monkeypatch):
     g = build_graph(toy_edges_df(spark))
     deltas = toy_deltas_df(spark)
     inc = IncrementalStream(spark, g)
-    assert inc._graph is not None
+    assert isinstance(inc.graph, ArrayGraph)
     inc.process_batch(deltas.filter("ts = 0"), 0)
-    assert inc._graph is None
+    assert isinstance(inc.graph, FrameGraph)
     inc.process_batch(deltas.filter("ts = 1"), 1)
     base = {(r.src, r.dst): r.weight for r in g.collect()}
     want_state, want_edges, want_q, _ = run_incremental_o(base, TOY_DELTAS)

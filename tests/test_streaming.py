@@ -131,6 +131,10 @@ def test_incremental_metrics_persisted(spark, tmp_path):
     assert any(r.ts == -1 and r.phase == "static" for r in rounds)
 
 
+def test_incremental_metrics_persisted_distributed(spark, tmp_path, distributed):
+    test_incremental_metrics_persisted(spark, tmp_path)
+
+
 def test_streaming_restart_mid_stream_idempotent_replay(spark, tmp_path):
     """VERDICT r3 #8: kill/restart ACROSS processes, not just replay
     within one — wrapper A (with a durable checkpoint dir) processes
