@@ -24,3 +24,26 @@ def distributed(monkeypatch):
     import linkgraph.plans.local as local
 
     monkeypatch.setattr(local, "MAX_VERTICES", 0)
+
+
+@pytest.fixture
+def frame_tier(monkeypatch):
+    """Carry the incremental graph as frames (stream_driver.FrameGraph)
+    while every operator keeps its own small-graph guard: the setting
+    for tests whose subject is the frame backend's driver loop, sinks
+    and resume rather than the operators' distributed plans (those run
+    under ``distributed``). Fails a test that never carried a graph."""
+    import linkgraph.plans.local as local
+    import linkgraph.streaming.stream_driver as sd
+
+    carry, carried = sd.carry, []
+
+    def frames(*a, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(local, "MAX_VERTICES", 0)
+            carried.append(carry(*a, **kw))
+        return carried[-1]
+
+    monkeypatch.setattr(sd, "carry", frames)
+    yield
+    assert carried and all(isinstance(g, sd.FrameGraph) for g in carried)

@@ -128,7 +128,7 @@ def test_incremental_run_matches_oracle_end_to_end(spark):
     assert any(f < 1.0 for f in fracs)
 
 
-def test_incremental_run_matches_oracle_end_to_end_distributed(spark, distributed):
+def test_incremental_run_matches_oracle_end_to_end_distributed(spark, frame_tier):
     test_incremental_run_matches_oracle_end_to_end(spark)
 
 
@@ -211,16 +211,16 @@ def test_incremental_mid_run_resume(spark, tmp_path):
     assert kill_m == full_m
 
 
-def test_incremental_mid_run_resume_distributed(spark, tmp_path, distributed):
+def test_incremental_mid_run_resume_distributed(spark, tmp_path, frame_tier):
     test_incremental_mid_run_resume(spark, tmp_path)
 
 
-def test_incremental_pre_partitioned_input_matches(spark, distributed):
+def test_incremental_pre_partitioned_input_matches(spark, frame_tier):
     """run_incremental(pre_partitioned=True) over an already
     hash(src)-partitioned edge table (the K1 bucketed feed) skips the
     loop's one-time repartition and lands the identical final state,
-    edges, modularity, and metrics trail (the distributed tier: the
-    plan under test)."""
+    edges, modularity, and metrics trail (on the frame backend, which
+    holds the layout under test)."""
     from linkgraph.plans.superstep import barrier
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -279,7 +279,7 @@ def test_incremental_write_trees_readback(spark, tmp_path):
         run_incremental(spark, g, toy_deltas_df(spark), write_trees=True)
 
 
-def test_incremental_write_trees_readback_distributed(spark, tmp_path, distributed):
+def test_incremental_write_trees_readback_distributed(spark, tmp_path, frame_tier):
     test_incremental_write_trees_readback(spark, tmp_path)
 
 

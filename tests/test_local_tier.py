@@ -270,13 +270,14 @@ BAD_ROWS = [
 ]
 
 
-@pytest.mark.parametrize("guard", [None, 0], ids=["local", "distributed"])
-def test_malformed_delta_rows_raise(spark, monkeypatch, guard):
+@pytest.mark.parametrize("tier", [None, "frame_tier"], ids=["local", "distributed"])
+def test_malformed_delta_rows_raise(spark, request, tier):
     """A delta row with an unknown op or a null ts, src or dst is an
     error on both tiers, in process_batch and in run_incremental — not
-    a row to drop."""
-    if guard is not None:
-        monkeypatch.setattr(local, "MAX_VERTICES", guard)
+    a row to drop. The check belongs to the carried graph, so the
+    distributed case carries frames (``frame_tier``)."""
+    if tier is not None:
+        request.getfixturevalue(tier)
     g = build_graph(toy_edges_df(spark))
     inc = IncrementalStream(spark, g)
     before = {r.id: r.community for r in inc.state.collect()}

@@ -131,7 +131,7 @@ def test_incremental_metrics_persisted(spark, tmp_path):
     assert any(r.ts == -1 and r.phase == "static" for r in rounds)
 
 
-def test_incremental_metrics_persisted_distributed(spark, tmp_path, distributed):
+def test_incremental_metrics_persisted_distributed(spark, tmp_path, frame_tier):
     test_incremental_metrics_persisted(spark, tmp_path)
 
 
