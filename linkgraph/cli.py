@@ -463,6 +463,7 @@ def main(argv: list[str] | None = None) -> int:
             checkpoint_dir=args.checkpoint_dir,
             screening=not args.no_screening,
             resume=not args.no_resume,
+            pre_partitioned=pre_partitioned,
             write_trees=args.write_trees,
         )
         run.state.write.mode("overwrite").parquet(f"{args.output}/state")

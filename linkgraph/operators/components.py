@@ -29,8 +29,6 @@ min-id labels.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,9 +45,6 @@ def connected_components(
     runner: SuperstepRunner | None = None,
     algorithm: str = "min-label",
     pre_partitioned: bool = False,
-    chain: int | str = "auto",
-    chain_cap: int = 4,
-    chain_probe_floor: float = 0.75,
 ) -> DataFrame:
     """Returns (id:long, component:long) on the undirected graph.
 
@@ -68,28 +63,11 @@ def connected_components(
     dst) — identical labels by symmetry, zero initial exchange
     (plan-audited).
 
-    chain: min-label iterations composed per MATERIALIZED superstep
-    (barrier-elision, the pagerank.chain analog). Min-label
-    propagation is monotone and idempotent — iterations past the
-    fixpoint are exact no-ops — so the final labels are IDENTICAL for
-    every chain schedule; only the per-job fixed costs (driver round
-    trip, localCheckpoint, Observation) are amortized, and the
-    changed-count convergence test is simply evaluated on the chain's
-    last iteration pair. "auto" (default) doubles the chain each
-    superstep (1, 1, 2, 4, ... capped at ``chain_cap``): rounds-to-go
-    equals the remaining graph diameter, which is unobservable, and
-    doubling reaches any diameter D in O(log D) jobs with at most
-    ~2x iteration overshoot. chain=1 is the reference-exact
-    one-iteration-per-job schedule (the plan-audit configuration);
-    runner.max_iter counts chains.
-
-    chain_cap defaults to 4 because each chained min-label iteration
-    references the accumulated plan twice (the neighbor aggregation
-    AND the least(own, nbr_min) update), so plan size doubles per
-    chained iteration — 2^4 embedded copies is the measured-safe
-    planning zone (the pagerank chain avoids the doubling by updating
-    onto the barriered leaf, but min-label needs the CURRENT label on
-    the update side, which lives only on the accumulated frame).
+    Every superstep runs exactly one min-label iteration and the loop
+    stops on the first superstep that changes no label, so
+    ``runner.max_iter`` (or ``max_iter``) counts iterations and
+    ``runner.metrics`` holds one row (delta = labels changed) per
+    iteration.
     """
     if algorithm == "star":
         return connected_components_star(spark, edges, max_iter=max_iter)
@@ -146,95 +124,45 @@ def connected_components(
                 verts.repartition(n_part, "id"), preserve_partitioning=True
             ).withColumn("component", F.col("id"))
 
-    if isinstance(chain, str) and chain != "auto":
-        raise ValueError(f"chain must be an int or 'auto', got {chain!r}")
-    auto = isinstance(chain, str)
-    chain_fixed = 1 if auto else max(1, chain)
+    ctx: dict = {}
 
     def step(st: DataFrame, i: int) -> DataFrame:
-        k = ctx["chain_next"] if auto else chain_fixed
-        ctx["last_chain"] = k
         cur = st.select("id", "component")
-        for j in range(k):
-            # the label side is aliased so chained iterations (joining
-            # `cur` with a frame DERIVED from `cur`) never trip
-            # ambiguous-self-join resolution; the single-iteration plan
-            # is unchanged (pure alias)
-            labels = cur.select(
-                F.col("id").alias("lid"), F.col("component")
-            )
-            labels = F.broadcast(labels) if small else labels.hint("shuffle_hash")
-            nbr_min = (
-                sym.join(labels, sym[gather_key] == F.col("lid"))
-                .groupBy(F.col(agg_key).alias("vid"))
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            if not small:
-                # nbr_min is hash-partitioned on the vertex key by the
-                # agg; the state is partitioned on id — exchange-free
-                # shuffle-hash update join
-                nbr_min = nbr_min.hint("shuffle_hash")
-            prev = cur
-            cur = prev.join(nbr_min, prev.id == F.col("vid"), "left").select(
-                prev.id,
-                prev.component.alias("old_component"),
-                F.least(
-                    prev.component, F.coalesce(F.col("nbr_min"), prev.component)
-                ).alias("component"),
-            )
-            if j < k - 1:
-                cur = cur.select("id", "component")
-        # changed-count of the LAST iteration pair rides the barrier's
-        # materialization (no separate per-superstep count job)
+        # the label side is aliased: `labels` and `nbr_min` derive from
+        # `cur`, and a shared `id` would trip ambiguous-self-join
+        # resolution
+        labels = cur.select(F.col("id").alias("lid"), F.col("component"))
+        labels = F.broadcast(labels) if small else labels.hint("shuffle_hash")
+        nbr_min = (
+            sym.join(labels, sym[gather_key] == F.col("lid"))
+            .groupBy(F.col(agg_key).alias("vid"))
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        if not small:
+            # nbr_min is hash-partitioned on the vertex key by the agg;
+            # the state is partitioned on id — exchange-free
+            # shuffle-hash update join
+            nbr_min = nbr_min.hint("shuffle_hash")
+        nxt = cur.join(nbr_min, cur.id == F.col("vid"), "left").select(
+            cur.id,
+            cur.component.alias("old_component"),
+            F.least(
+                cur.component, F.coalesce(F.col("nbr_min"), cur.component)
+            ).alias("component"),
+        )
+        # the changed-count rides the barrier's materialization (no
+        # separate per-superstep count job)
         obs = Observation()
         ctx["obs"] = obs
-        return cur.observe(
+        return nxt.observe(
             obs,
             F.sum(
                 (F.col("component") != F.col("old_component")).cast("long")
             ).alias("c"),
         )
 
-    ctx: dict = {
-        "chain_next": 1,
-        "last_chain": 1,
-        # self-calibration (see pagerank.converge): chaining pays only
-        # where the per-job floor dominates; probe, keep only if it
-        # beats the unchained per-iteration cost
-        "t_last": None,
-        "uni_cost": None,
-        "no_chain": False,
-    }
-
     def converge(old: DataFrame, new: DataFrame, i: int) -> tuple[bool, float]:
         changed = int(ctx.pop("obs").get["c"] or 0)
-        if auto:
-            now = time.perf_counter()
-            iters = ctx["last_chain"]
-            if ctx["t_last"] is not None:
-                per_iter = (now - ctx["t_last"]) / iters
-                if iters == 1:
-                    u = ctx["uni_cost"]
-                    ctx["uni_cost"] = per_iter if u is None else min(u, per_iter)
-                elif ctx["uni_cost"] is not None and per_iter >= 0.9 * ctx["uni_cost"]:
-                    ctx["no_chain"] = True
-            ctx["t_last"] = now
-            if changed:
-                if (
-                    ctx["no_chain"]
-                    or ctx["uni_cost"] is None
-                    or ctx["uni_cost"] < chain_probe_floor
-                ):
-                    # same probe gate as pagerank: below
-                    # ``chain_probe_floor`` per unchained superstep the
-                    # job floor is within codegen-compile territory and
-                    # a chained probe can only lose (measured ~+0.5s at
-                    # the bench's 0.65s supersteps); at cluster-scale
-                    # floors the probe engages and the doubling
-                    # schedule takes over
-                    ctx["chain_next"] = 1
-                else:
-                    ctx["chain_next"] = min(max(1, chain_cap), 2 * ctx["last_chain"])
         return changed == 0, float(changed)
 
     runner = runner or SuperstepRunner(

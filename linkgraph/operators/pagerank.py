@@ -34,7 +34,6 @@ Scale design — ONE exchange per superstep on the big path:
 
 from __future__ import annotations
 
-import math
 import time
 
 import numpy as np
@@ -51,14 +50,12 @@ def _pagerank_local(
     damping: float,
     tol: float,
     max_iter: int,
-    chain: int | str,
     runner: SuperstepRunner | None,
 ) -> DataFrame:
     """The distributed recurrence on driver-held arrays: the same
     weighted transition p = w / out_w(src), the same uniform dangling
-    redistribution and base term, one metrics row per superstep of
-    ``chain`` iterations (1 unless an integer chain is given) with the
-    convergence test on the superstep's last iteration pair."""
+    redistribution and base term, one iteration and one metrics row
+    per superstep."""
     src, dst, w = arrays
     ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     n = len(ids)
@@ -66,14 +63,12 @@ def _pagerank_local(
     out_w = np.bincount(si, weights=w, minlength=n)
     dangling = np.bincount(si, minlength=n) == 0
     p = w / out_w[si]
-    k = max(1, chain) if isinstance(chain, int) else 1
     score = np.full(n, 1.0 / n)
     for i in range(max_iter):
         t0 = time.perf_counter()
-        for _ in range(k):
-            old = score
-            base = (1.0 - damping) / n + damping * float(old[dangling].sum()) / n
-            score = base + damping * np.bincount(di, weights=old[si] * p, minlength=n)
+        old = score
+        base = (1.0 - damping) / n + damping * float(old[dangling].sum()) / n
+        score = base + damping * np.bincount(di, weights=old[si] * p, minlength=n)
         delta = float(np.max(np.abs(score - old)))
         converged = delta < tol
         if runner is not None:
@@ -105,9 +100,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     run_id: str = "pagerank",
     runner: SuperstepRunner | None = None,
-    chain: int | str = "auto",
-    chain_cap: int = 16,
-    chain_probe_floor: float = 0.75,
 ) -> DataFrame:
     """Power iteration to ``max |score - score'| < tol``.
 
@@ -116,18 +108,21 @@ def pagerank(
     formulation, matched exactly by the NumPy oracle in tests.
     Returns (id:long, score:double).
 
+    Every superstep runs exactly one power iteration and tests
+    convergence on that iteration's max per-vertex delta, so
+    ``runner.max_iter`` (or ``max_iter``) counts iterations and
+    ``runner.metrics`` holds one row per iteration on both tiers.
+
     Tier: a graph within the small-graph guard of ``plans/local.py``
     (at most 50,000 vertices AND at most 5,000,000 edge rows, both
     read off the one vertex-count aggregation) is collected to the
     driver once and iterated in NumPy — the same recurrence, scores
-    allclose 1e-6 to the distributed plan, the same iteration count,
-    one ``runner.metrics`` row per superstep. Above the guard, or when
-    the runner (or ``checkpoint_dir``) asks for durable checkpoints,
-    the distributed superstep plan below runs: resuming from a
-    checkpoint is what such a caller asked for. The planning knobs
-    (salt_hubs, pre_partitioned, broadcast_threshold, chain="auto")
-    only shape the distributed plan; an integer chain is honored by
-    both tiers.
+    allclose 1e-6 to the distributed plan, the same iteration count.
+    Above the guard, or when the runner (or ``checkpoint_dir``) asks
+    for durable checkpoints, the distributed superstep plan below
+    runs: resuming from a checkpoint is what such a caller asked for.
+    The planning knobs (salt_hubs, pre_partitioned,
+    broadcast_threshold) only shape the distributed plan.
 
     salt_hubs: None (default) probes max in-degree once per call (one
     scan + agg, amortized over the iteration) and turns the salted
@@ -142,46 +137,7 @@ def pagerank(
     ``graph.build.read_adjacency_table`` — so the one-time
     edges_norm repartition is skipped (zero initial exchange;
     plan-audited).
-
-    chain: power iterations per MATERIALIZED superstep (barrier-
-    elision). Each runner superstep lazily composes ``chain``
-    iterations into one Spark job — the per-job fixed cost (driver
-    round trip, task scheduling, localCheckpoint, Observation fetch)
-    is paid once per chain instead of once per iteration, which is
-    the measured floor on small/contracted graphs (STATUS.md pages-
-    spine profile) and a real win at scale too (fewer global barriers
-    per convergence). Intermediate iterations fold the dangling mass
-    in-plan as a broadcast 1-row scalar (exchange reuse makes the
-    rescan free); the convergence test (max per-vertex delta < tol)
-    is evaluated on the chain's LAST iteration pair, so a run may
-    execute up to chain-1 iterations past convergence — same
-    fixpoint criterion, coarser test granularity. An integer chain=k
-    is the fixed schedule (chain=1 = the reference-exact
-    per-iteration schedule and the plan-audit configuration);
-    runner.max_iter counts CHAINS when chain > 1. Scores equal the
-    chain=1 run's at the same iteration count (identical
-    per-iteration arithmetic; tested allclose).
-
-    chain="auto" (default) sizes each superstep's chain PREDICTIVELY
-    from the observed delta decay — tol-convergence mode only (with
-    tol <= 0, i.e. the fixed-iteration oracle mode, "auto" IS
-    chain=1, so fixed-k results are untouched). The first two
-    supersteps run unchained to measure the per-iteration decay
-    ratio r; each later superstep chains ~log(tol/delta)/log(r)
-    iterations (the predicted remaining count), capped at
-    ``chain_cap``. A well-predicted run materializes each barrier
-    exactly when useful information (the convergence test) is due —
-    e.g. a 53-iteration convergence becomes ~6 jobs instead of 53 —
-    while executing the same per-iteration arithmetic. When the
-    graph has dangling vertices "auto" stays unchained: each chained
-    iteration's in-plan dangling scalar references the accumulated
-    plan twice, so plan size (and Catalyst planning time) DOUBLES per
-    chained iteration — measured 111s vs 8s on a toy graph — and the
-    per-iteration schedule is the right default there; pass an
-    explicit integer chain to override.
     """
-    if isinstance(chain, str) and chain != "auto":
-        raise ValueError(f"chain must be an int or 'auto', got {chain!r}")
     edges = local.normalized(edges)
     n, n_rows = local.graph_size(edges)
     if n == 0:
@@ -190,8 +146,7 @@ def pagerank(
     if not ckpt and local.fits(n, n_rows):
         return _pagerank_local(
             spark, local.collect_edges(edges), damping, tol,
-            runner.max_iter if runner is not None else max_iter,
-            chain, runner,
+            runner.max_iter if runner is not None else max_iter, runner,
         )
 
     verts = (
@@ -228,64 +183,25 @@ def pagerank(
             max_in > hub_degree_threshold and max_in > rows_per_reducer / 4.0
         )
 
-    auto = isinstance(chain, str) and tol > 0.0
-    chain_fixed = 1 if isinstance(chain, str) else max(1, chain)
-
-    dangling_flag = verts.join(out_w, verts.id == out_w.src, "left").select(
-        "id", F.col("out_w").isNull().alias("is_dangling")
-    )
     # state partitioned on id to match edges_norm's src-partitioning;
     # barrier preserves it across supersteps
-    state = dangling_flag.withColumn("score", F.lit(1.0 / n)).repartition(n_part, "id")
+    state = (
+        verts.join(out_w, verts.id == out_w.src, "left")
+        .select("id", F.col("out_w").isNull().alias("is_dangling"))
+        .withColumn("score", F.lit(1.0 / n))
+        .repartition(n_part, "id")
+    )
 
     small = (not pre_partitioned) and n <= broadcast_threshold
     # dangling mass is carried across supersteps by `converge`; None
     # means "recompute from current state" — covers both the first
-    # superstep and a mid-run resume from a durable checkpoint.
-    # n_dangling: -1 = not yet measured (the count job runs lazily, the
-    # first time a superstep actually chains); chain_next/prev_delta
-    # drive the "auto" predictive schedule.
-    ctx: dict = {
-        "dangling": None,
-        "n_dangling": -1,
-        "chain_next": 1,
-        "prev_delta": None,
-        "cap": max(1, chain_cap),
-        # self-calibration state (auto mode): per-iteration wall cost
-        # of unchained supersteps vs inside-a-chain iterations — the
-        # job-floor-vs-stage-cost trade is machine/shape-dependent
-        # (measured: chaining is ~10x per-iteration at 32 shuffle
-        # partitions where the per-job floor dominates, and a LOSS at
-        # 2 partitions where codegen-compile per chained segment
-        # exceeds the whole unchained superstep), so the schedule
-        # probes a small chain first and turns chaining off for the
-        # rest of the run if the probe did not pay.
-        "t_last": None,
-        "uni_cost": None,
-        "no_chain": False,
-        "chained_ok": False,
-        # the probe chain is 2 (the cheapest chained superstep that
-        # still measures the per-iteration cost); each superstep that
-        # beats 0.6x the unchained cost doubles the dynamic cap toward
-        # chain_cap, so environments where the job floor dominates
-        # reach deep chains within ~3 supersteps while a probe that
-        # does not pay costs at most one extra-compile superstep
-        "cap_dyn": 2,
-    }
+    # superstep and a mid-run resume from a durable checkpoint
+    ctx: dict = {"dangling": None}
 
-    def _one_iteration(cur: DataFrame, base_col, left: DataFrame) -> DataFrame:
-        """One power iteration: gather `cur`'s scores, update onto
-        ``left``. For the unchained schedule (and a chain's LAST
-        iteration) left IS cur, carrying old_score for the delta test.
-        Intermediate chained iterations pass the superstep's BARRIERED
-        state instead — same id set, same static is_dangling column,
-        identical arithmetic — so the accumulated plan is referenced
-        ONCE per iteration (left is a checkpoint LEAF) and chained
-        plans grow LINEARLY; with left=cur every iteration would embed
-        the accumulated plan twice (once under the aggregation, once
-        as the join's left side) and plan size/planning time would
-        double per chained iteration (measured: analysis hangs outright
-        at chain=16)."""
+    def _one_iteration(cur: DataFrame, base_col) -> DataFrame:
+        """One power iteration: gather ``cur``'s scores along the
+        edges, update each vertex to base + damping * incoming and
+        carry its previous score as old_score for the delta test."""
         scores = cur.select("id", "score")
         # broadcast below threshold (driver-serial build: small graphs
         # only); above it, shuffle-hash with the id-partitioned state as
@@ -312,18 +228,17 @@ def pagerank(
             )
         else:
             incoming = contribs.groupBy("dst").agg(F.sum("contrib").alias("incoming"))
-        # rename the join key: chained iterations join with a frame
-        # DERIVED from the same lineage, where a shared `dst`/`id`
-        # would trip ambiguous-self-join resolution
+        # rename the join key: `incoming` derives from `cur`, and a
+        # shared name would trip ambiguous-self-join resolution
         incoming = incoming.select(F.col("dst").alias("in_id"), "incoming")
         if not small:
             # incoming is hash-partitioned on dst by the agg; with the
             # state partitioned on id this join is exchange-free too
             incoming = incoming.hint("shuffle_hash")
-        return left.join(incoming, left.id == F.col("in_id"), "left").select(
-            left.id,
-            left.is_dangling,
-            left.score.alias("old_score"),
+        return cur.join(incoming, cur.id == F.col("in_id"), "left").select(
+            cur.id,
+            cur.is_dangling,
+            cur.score.alias("old_score"),
             (base_col + F.lit(damping) * F.coalesce(F.col("incoming"), F.lit(0.0))).alias(
                 "score"
             ),
@@ -337,61 +252,13 @@ def pagerank(
                 ).first()[0]
                 or 0.0
             )
-        k = ctx["chain_next"] if auto else chain_fixed
-        if k > 1 and ctx["n_dangling"] < 0:
-            # one-time dangling count: chained iterations on a graph
-            # WITH dangling vertices need the in-plan mass scalar,
-            # whose agg references the accumulated plan twice — plan
-            # size doubles per chained iteration (measured 111s vs 8s
-            # on a toy graph at cap 6 from pure planning) — so "auto"
-            # falls back to the unchained schedule there; an explicit
-            # integer chain is still honored (the tested fixed path)
-            ctx["n_dangling"] = dangling_flag.filter(F.col("is_dangling")).count()
-            if auto and ctx["n_dangling"] > 0:
-                ctx["cap"] = 1
-                k = 1
-        ctx["last_chain"] = k
-        n_dangling = ctx["n_dangling"]
-        cur = st
-        for j in range(k):
-            if j == 0 or n_dangling == 0:
-                # no dangling vertices -> the dangling term is 0.0
-                # forever and every chained iteration's base is the
-                # same constant: no in-plan scalar needed (the common
-                # case for link graphs where every page links out).
-                # Intermediate chained iterations update onto the
-                # barriered leaf `st` (linear plan growth — see
-                # _one_iteration); the last keeps `cur` as left so
-                # old_score is the true previous-iteration score for
-                # the convergence delta
-                base_col = F.lit(
-                    (1.0 - damping) / n + damping * ctx["dangling"] / n
-                )
-                left = st if j < k - 1 else cur
-            else:
-                # intermediate chained iteration: the dangling mass is
-                # a 1-row broadcast scalar folded into the same plan
-                # (the rescan of `cur` reuses its exchanges); the
-                # dmass-augmented frame must also be the update side,
-                # so this (explicit-chain-only) mode keeps the
-                # plan-doubling shape — see the docstring's cap note
-                dm = cur.agg(
-                    F.sum(
-                        F.when(F.col("is_dangling"), F.col("score")).otherwise(0.0)
-                    ).alias("dmass")
-                )
-                cur = cur.crossJoin(F.broadcast(dm))
-                base_col = F.lit((1.0 - damping) / n) + F.lit(
-                    damping / n
-                ) * F.coalesce(F.col("dmass"), F.lit(0.0))
-                left = cur
-            cur = _one_iteration(cur, base_col, left)
+        base = F.lit((1.0 - damping) / n + damping * ctx["dangling"] / n)
         # convergence scalars ride the barrier's own materialization
         # (zero extra jobs per superstep): max per-vertex delta + the
         # NEXT superstep's dangling mass
         obs = Observation()
         ctx["obs"] = obs
-        return cur.observe(
+        return _one_iteration(st, base).observe(
             obs,
             F.max(F.abs(F.col("score") - F.col("old_score"))).alias("delta"),
             F.sum(
@@ -403,69 +270,6 @@ def pagerank(
         row = ctx.pop("obs").get
         delta = float(row["delta"])
         ctx["dangling"] = float(row["dmass"] or 0.0)
-        if auto:
-            # calibration: compare the measured per-iteration cost of
-            # chained supersteps against unchained ones; a chain that
-            # does not beat the unchained cost switches chaining off
-            # for the rest of the run (one-way — no flapping), a chain
-            # that clearly pays raises the dynamic cap toward chain_cap
-            now = time.perf_counter()
-            iters = ctx["last_chain"]
-            if ctx["t_last"] is not None:
-                per_iter = (now - ctx["t_last"]) / iters
-                if iters == 1:
-                    u = ctx["uni_cost"]
-                    ctx["uni_cost"] = per_iter if u is None else min(u, per_iter)
-                elif ctx["uni_cost"] is not None:
-                    if per_iter >= 0.9 * ctx["uni_cost"]:
-                        ctx["no_chain"] = True
-                    else:
-                        ctx["chained_ok"] = True
-                        if per_iter <= 0.6 * ctx["uni_cost"]:
-                            ctx["cap_dyn"] = min(ctx["cap"], ctx["cap_dyn"] * 2)
-            ctx["t_last"] = now
-        if auto and delta >= tol:
-            # predictive schedule: fit the per-iteration decay ratio r
-            # from the last two observed deltas and chain the predicted
-            # remaining-iteration count log(tol/delta)/log(r) into the
-            # next superstep (capped; falls back to doubling when the
-            # decay is too flat to extrapolate, and stays unchained
-            # until two measurements exist or while delta still grows)
-            prev, iters = ctx["prev_delta"], ctx["last_chain"]
-            nxt = 1
-            if prev is not None and 0.0 < delta < prev:
-                r = (delta / prev) ** (1.0 / iters)
-                if r < 0.999:
-                    nxt = max(1, math.ceil(math.log(tol / delta) / math.log(r)))
-                else:
-                    nxt = 2 * iters
-            if ctx["no_chain"] or (
-                not ctx["chained_ok"]
-                and (
-                    nxt < 8
-                    or ctx["uni_cost"] is None
-                    or ctx["uni_cost"] < chain_probe_floor
-                )
-            ):
-                # chaining has a real cost floor (fresh codegen compile
-                # of every chained segment — O(100ms) each — and
-                # re-execution of the final iteration's small
-                # non-exchange tail), so probing only makes sense when
-                # there is something to win back: the run must be
-                # predicted to need >= 8 more iterations AND the
-                # unchained superstep itself must cost at least
-                # ``chain_probe_floor`` (below that the job floor is
-                # already within compile-cost territory — the measured
-                # pages-spine case, where every chained schedule LOST
-                # to the 0.27s/superstep baseline). At cluster scale a
-                # superstep's floor is scheduler+checkpoint-bound and
-                # far above this, so the probe engages there. A probe
-                # that measurably beat the unchained cost unlocks
-                # chaining for the rest of the run including short
-                # tails; one that did not switches chaining off.
-                nxt = 1
-            ctx["chain_next"] = int(min(ctx["cap"], ctx["cap_dyn"], nxt))
-        ctx["prev_delta"] = delta
         return delta < tol, delta
 
     runner = runner or SuperstepRunner(

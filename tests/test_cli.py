@@ -115,10 +115,18 @@ def test_cli_incremental_roundtrip(spark, tmp_path, capsys):
     )
 
 
-def test_cli_build_adjacency_and_table_fed_pagerank(spark, tmp_path, capsys):
+def test_cli_build_adjacency_and_table_fed_pagerank(
+    spark, tmp_path, capsys, monkeypatch
+):
     """build-adjacency writes the catalog-known bucketed K1 table; the
-    graph commands accept --table and run pre-partitioned, matching
-    the --edges path's scores exactly."""
+    graph commands accept --table and run pre-partitioned: pagerank
+    matches the --edges path's scores exactly, and incremental hands
+    ``pre_partitioned=True`` to run_incremental and prints the dynamic
+    oracle's modularity."""
+    import linkgraph.streaming.incremental as incremental
+    from tests.fixtures import TOY_DELTAS, toy_deltas_df
+    from tests.oracle_dynamic import run_incremental_o
+
     g = build_graph(toy_edges_df(spark))
     edges_path = str(tmp_path / "edges_t")
     g.write.parquet(edges_path)
@@ -154,6 +162,26 @@ def test_cli_build_adjacency_and_table_fed_pagerank(spark, tmp_path, capsys):
     b = {r.id: r.score for r in spark.read.parquet(str(tmp_path / "pr_e")).collect()}
     assert set(a) == set(b)
     assert all(abs(a[i] - b[i]) < 1e-12 for i in a)
+
+    calls = []
+    run_incremental = incremental.run_incremental
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs)
+        return run_incremental(*args, **kwargs)
+
+    monkeypatch.setattr(incremental, "run_incremental", spy)
+    deltas_path = str(tmp_path / "deltas_t")
+    toy_deltas_df(spark).write.parquet(deltas_path)
+    rc = main(
+        ["incremental", "--table", "t_cli_adj", "--deltas", deltas_path,
+         "--output", str(tmp_path / "inc_t")]
+    )
+    assert rc == 0
+    assert [c.get("pre_partitioned") for c in calls] == [True]
+    meta = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    base = {(r.src, r.dst): r.weight for r in g.collect()}
+    assert abs(meta["modularity"] - run_incremental_o(base, TOY_DELTAS)[2]) < 1e-12
     spark.sql("DROP TABLE t_cli_adj")
 
 

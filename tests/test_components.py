@@ -81,21 +81,25 @@ def test_cc_star_isolated_and_selfloop_vertices(spark):
     assert got == {1: 1, 2: 1, 3: 3}
 
 
-def test_cc_auto_chain_labels_identical(spark):
-    """chain='auto' (the default doubling schedule) must produce
-    byte-identical labels to the per-iteration schedule — min-label
-    iterations are idempotent past the fixpoint — including on a long
-    path graph where chaining actually engages."""
-    from linkgraph.operators.components import connected_components
+def test_cc_path_graph_matches_oracle_deterministically(spark):
+    """Min-label propagation over two long paths (60 and 25 edges, one
+    iteration per superstep): labels equal the union-find oracle, and a
+    second run gives the same labels in the same number of supersteps."""
+    from linkgraph.plans.superstep import SuperstepRunner
 
-    chain_edges = [(i, i + 1, 1.0) for i in range(60)] + [
+    path_edges = [(i, i + 1, 1.0) for i in range(60)] + [
         (100 + i, 101 + i, 1.0) for i in range(25)
     ]
-    df = spark.createDataFrame(chain_edges, "src long, dst long, weight double")
-    a = {r.id: r.component for r in connected_components(spark, df).collect()}
-    b = {r.id: r.component for r in connected_components(
-        spark, df, chain=1).collect()}
+    df = spark.createDataFrame(path_edges, "src long, dst long, weight double")
+    runs = []
+    for run_id in ("path-a", "path-b"):
+        r = SuperstepRunner(spark, run_id=run_id, max_iter=100)
+        labels = {row.id: row.component for row in connected_components(
+            spark, df, runner=r).collect()}
+        runs.append((labels, len(r.metrics)))
+    (a, n_a), (b, n_b) = runs
+    assert a == cc_oracle(path_edges)
     assert a == b
-    c = {r.id: r.component for r in connected_components(
-        spark, df, chain=4).collect()}
-    assert a == c
+    # label 0 needs 60 hops to reach vertex 60, plus one superstep
+    # that changes nothing
+    assert n_a == n_b == 61

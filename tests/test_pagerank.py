@@ -87,65 +87,23 @@ def test_pagerank_metrics_logged(spark):
     assert all(np.isfinite(d) for d in deltas)
 
 
-def test_pagerank_chained_matches_unchained(spark, distributed):
-    """chain=k (k iterations per materialized barrier) must reproduce
-    the per-iteration schedule's scores at the same iteration count —
-    both with and without dangling vertices (the dangling case folds
-    the mass as an in-plan broadcast scalar each chained iteration)."""
-    from linkgraph.plans.superstep import SuperstepRunner
-
-    # dangling: 2 has no out-edges
-    dangling = [(0, 1, 1.0), (1, 2, 1.0), (3, 0, 1.0), (0, 3, 2.0)]
-    # no dangling: every vertex links out (the constant-base fast case)
-    cyclic = [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0), (2, 3, 1.0), (3, 1, 1.0)]
-    for edges in (dangling, cyclic):
-        df = spark.createDataFrame(edges, "src long, dst long, weight double")
-        r1 = SuperstepRunner(spark, run_id="chain-a", max_iter=12)
-        a = {r.id: r.score
-             for r in pagerank(spark, df, tol=0.0, runner=r1).collect()}
-        r3 = SuperstepRunner(spark, run_id="chain-b", max_iter=4)
-        b = {r.id: r.score
-             for r in pagerank(spark, df, tol=0.0, runner=r3, chain=3).collect()}
-        assert a.keys() == b.keys()
-        assert all(abs(a[k] - b[k]) < 1e-12 for k in a), (edges, a, b)
-        assert len(r3.metrics) == 4  # 4 chains of 3 = 12 iterations
-
-
-def test_pagerank_chained_converges_to_oracle(spark, distributed):
-    g = build_graph(toy_edges_df(spark))
-    edges = [(r.src, r.dst, r.weight) for r in g.collect()]
-    result = pagerank(spark, g, tol=1e-9, chain=4)
-    _assert_allclose(result, pagerank_oracle(edges, tol=1e-9), tol=1e-6)
-
-
-def test_pagerank_auto_chain_converges_like_unchained(spark, distributed):
-    """chain='auto' (the default) must reach the same fixpoint as the
-    reference per-iteration schedule: identical convergence criterion,
-    scores allclose (auto may execute a few iterations past the
-    crossing — same tolerance argument as fixed chains), and tol=0
-    fixed-k mode is EXACTLY the chain=1 schedule (oracle safety)."""
-    import math
-
+def test_pagerank_distributed_runs_are_deterministic(spark, distributed):
+    """Results depend only on the input and the parameters: two
+    back-to-back tol-mode runs of the distributed plan take the same
+    number of supersteps and agree within 1e-12 (not bit-exactly: the
+    shuffle's float sums may arrive in a different order per run)."""
     from linkgraph.plans.superstep import SuperstepRunner
 
     df = spark.createDataFrame(
         random_edges(120, 480, seed=3), "src long, dst long, weight double"
     )
-    r_auto = SuperstepRunner(spark, run_id="auto-a", max_iter=100)
-    auto = {r.id: r.score for r in pagerank(
-        spark, df, tol=1e-8, runner=r_auto).collect()}
-    r_one = SuperstepRunner(spark, run_id="auto-b", max_iter=100)
-    one = {r.id: r.score for r in pagerank(
-        spark, df, tol=1e-8, runner=r_one, chain=1).collect()}
-    assert set(auto) == set(one)
-    for k in one:
-        assert math.isclose(auto[k], one[k], rel_tol=0, abs_tol=5e-8)
-    # fixed-k mode: auto IS chain=1 (bit-identical schedule and scores)
-    r_fa = SuperstepRunner(spark, run_id="fk-a", max_iter=6)
-    fa = {r.id: r.score for r in pagerank(
-        spark, df, tol=0.0, runner=r_fa).collect()}
-    r_f1 = SuperstepRunner(spark, run_id="fk-b", max_iter=6)
-    f1 = {r.id: r.score for r in pagerank(
-        spark, df, tol=0.0, runner=r_f1, chain=1).collect()}
-    assert fa == f1
-    assert len(r_fa.metrics) == len(r_f1.metrics) == 6
+    runs = []
+    for run_id in ("det-a", "det-b"):
+        r = SuperstepRunner(spark, run_id=run_id, max_iter=100)
+        scores = {row.id: row.score for row in pagerank(
+            spark, df, tol=1e-7, runner=r).collect()}
+        runs.append((scores, len(r.metrics)))
+    (a, n_a), (b, n_b) = runs
+    assert n_a == n_b < 100
+    assert set(a) == set(b)
+    assert all(abs(a[k] - b[k]) < 1e-12 for k in a), (a, b)

@@ -115,26 +115,10 @@ try:
     pagerank(spark, edges, tol=1e-6, pre_partitioned=True, max_iter=3).count()
 finally:
     ss.barrier = orig_barrier
-if len(captured) >= 2:
-    dump("pagerank_superstep", captured[1])
-
-# chained superstep (chain=4, explicit) — shows the composed plan
-captured.clear()
-ss.barrier = hook
-try:
-    try:
-        pagerank(
-            spark, edges, tol=1e-12, pre_partitioned=True, max_iter=2, chain=4
-        ).count()
-    except TypeError:
-        # round-5 signature has chain but identical call shape; re-raise others
-        raise
-finally:
-    ss.barrier = orig_barrier
     if tiers:
         tiers.MAX_VERTICES = guard
-if len(captured) >= 3:
-    dump("pagerank_superstep_chain4", captured[2])
+if len(captured) >= 2:
+    dump("pagerank_superstep", captured[1])
 
 # ---- corpus_clean ---------------------------------------------------
 from linkgraph.functions.corpus import clean_corpus  # noqa: E402
