@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from linkgraph.plans import local
 
 
 def _fs_for(spark, path: str):
@@ -730,6 +732,43 @@ def knn_ivf(
     )
 
 
+def _assign_batch(
+    vectors: DataFrame, centroids, id_col: str, vec_col: str, gen: int | None = None
+) -> DataFrame:
+    """(neighbor_id, nv, cid[, gen]) rows of a vector batch: the id as
+    long, the vector as array<double>, its list from the Arrow-batched
+    quantizer and, for a generation-stamped store, ``gen``."""
+    assign_udf, _ = _np_quantizer_udfs(centroids, 1)
+    v = vectors.select(
+        F.col(id_col).cast("long").alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("nv"),
+    ).withColumn("cid", assign_udf(F.col("nv")))
+    return v if gen is None else v.withColumn("gen", F.lit(gen).cast("long"))
+
+
+def _write_tombstones(
+    spark, ids, gen_cut: int, write, id_col: str | None = None
+) -> int:
+    """Write one (id, gen_cut) row per element of ``ids`` (a DataFrame's
+    ``id_col``, default its first column, or ints, sent as one Arrow
+    frame) as one file via ``write``. Returns the rows written, observed
+    on that write: no count job."""
+    if not isinstance(ids, DataFrame):
+        ids = local.frame(
+            spark, "id long", id=np.fromiter((int(i) for i in ids), np.int64)
+        )
+    obs = Observation()
+    write(
+        ids.select(
+            F.col(id_col or ids.columns[0]).cast("long").alias("id"),
+            F.lit(gen_cut).cast("long").alias("gen_cut"),
+        )
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .coalesce(1)
+    )
+    return int(obs.get["n"])
+
+
 def build_ivf_index(
     vectors: DataFrame,
     path: str,
@@ -756,18 +795,10 @@ def build_ivf_index(
     quantizer's hot lists. Returns the centroids."""
     if centroids is None:
         centroids = ivf_centroids(vectors, n_centroids, id_col, vec_col)
-    assign_udf, _ = _np_quantizer_udfs(centroids, 1)
-    v = (
-        vectors.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("nv"),
-        )
-        .withColumn("cid", assign_udf(F.col("nv")))
-        # generation stamp for incremental maintenance: appended
-        # batches get gen 1, 2, ... and tombstones carry a gen cut,
-        # so delete-then-re-add works without a compact (LSM-style)
-        .withColumn("gen", F.lit(0).cast("long"))
-    )
+    # generation stamp for incremental maintenance: appended batches
+    # get gen 1, 2, ... and tombstones carry a gen cut, so
+    # delete-then-re-add works without a compact (LSM-style)
+    v = _assign_batch(vectors, centroids, id_col, vec_col, gen=0)
     if shuffle:
         v = v.repartition("cid")
     v.write.mode("overwrite").partitionBy("cid").parquet(path)
@@ -866,11 +897,7 @@ def build_ivf_table(
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if centroids is None:
         centroids = ivf_centroids(vectors, n_centroids, id_col, vec_col)
-    assign_udf, _ = _np_quantizer_udfs(centroids, 1)
-    v = vectors.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("nv"),
-    ).withColumn("cid", assign_udf(F.col("nv")))
+    v = _assign_batch(vectors, centroids, id_col, vec_col)
     (
         v.repartition(num_buckets, "cid")
         .write.mode("overwrite")
@@ -891,7 +918,15 @@ def build_ivf_table(
     # per-list size stats as a companion table (the catalog-world
     # analog of the path index's sidecar — VERDICT r5 #1): readers SUM
     # per cid, so maintenance appends deltas instead of rewriting
+    _reset_table_sizes(spark, table)
+    return centroids
+
+
+def _reset_table_sizes(spark, table: str) -> int:
+    """Rewrite ``<table>_sizes`` as the exact per-list row counts of the
+    bucketed table; returns their sum, observed on that write."""
     _drop_companion(spark, table, "_sizes")
+    obs = Observation()
     _companion_write(
         spark,
         table,
@@ -899,9 +934,18 @@ def build_ivf_table(
         spark.table(table)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("cnt"))
+        .observe(obs, F.sum("cnt").alias("n"))
         .coalesce(1),
     )
-    return centroids
+    return int(obs.get["n"] or 0)
+
+
+def _read_table_centroids(spark, table: str) -> list:
+    """Load a ``build_ivf_table`` quantizer (``<table>_centroids``), cid order."""
+    return sorted(
+        (int(r["cid"]), list(r["ce"]))
+        for r in spark.table(table + "_centroids").collect()
+    )
 
 
 def _table_location(spark, table: str) -> str:
@@ -924,6 +968,11 @@ def _companion_write(spark, table: str, suffix: str, df: DataFrame) -> None:
     df.write.mode("append").option("path", loc).saveAsTable(table + suffix)
 
 
+def _table_tombstone_append(spark, table: str):
+    """A ``_write_tombstones`` writer: append to ``<table>_tombstones``."""
+    return lambda t: _companion_write(spark, table, "_tombstones", t)
+
+
 def _drop_companion(spark, table: str, suffix: str) -> None:
     """Drop a companion table AND its files (external tables keep
     their files on DROP, which would resurrect stale rows when a later
@@ -938,11 +987,12 @@ def _drop_companion(spark, table: str, suffix: str) -> None:
 def _table_gen(spark, table: str) -> int:
     """Current generation of a maintained ``build_ivf_table`` — max row
     of the ``<table>_meta`` companion (0 if never upserted). In a
-    catalog world metadata lives in tables, not sidecar files."""
+    catalog world metadata lives in tables, not sidecar files. One row
+    per upsert: one scan, max on the driver (no aggregate exchange)."""
     if not spark.catalog.tableExists(table + "_meta"):
         return 0
-    row = spark.table(table + "_meta").agg(F.max("gen").alias("g")).first()
-    return int(row["g"] or 0)
+    rows = spark.table(table + "_meta").collect()
+    return max((int(r["gen"]) for r in rows), default=0)
 
 
 def _table_list_sizes(spark, table: str) -> dict[int, int] | None:
@@ -970,10 +1020,13 @@ def _table_tombstone_cut(spark, table: str) -> DataFrame | None:
     iff some tombstone covers its id at-or-after its generation."""
     if not spark.catalog.tableExists(table + "_tombstones"):
         return None
-    return (
-        spark.table(table + "_tombstones")
-        .groupBy(F.col("id").alias("t_id"))
-        .agg(F.max("gen_cut").alias("t_cut"))
+    return _tombstone_cut(spark.table(table + "_tombstones"))
+
+
+def _tombstone_cut(tombstones: DataFrame) -> DataFrame:
+    """(t_id, t_cut): the highest gen cut per tombstoned id."""
+    return tombstones.groupBy(F.col("id").alias("t_id")).agg(
+        F.max("gen_cut").alias("t_cut")
     )
 
 
@@ -1035,11 +1088,7 @@ def knn_ivf_join_table(
     case) the plan is exactly the pre-round-6 single cogroup.
     hot_list_cap=None disables splitting outright; a stat-less
     (pre-round-6) table pays one count pass to size the salt."""
-    centroids = [
-        (int(r["cid"]), list(r["ce"]))
-        for r in spark.table(table + "_centroids").collect()
-    ]
-    centroids.sort(key=lambda t: t[0])
+    centroids = _read_table_centroids(spark, table)
     n_probe_eff = min(n_probe, len(centroids))
     _, probes_udf = _np_quantizer_udfs(centroids, n_probe_eff)
     q = queries.select(
@@ -1124,41 +1173,21 @@ def ivf_table_upsert(
     FIRST (crash between the writes under-serves, never double-serves).
     Returns the new generation. Compact with ``ivf_table_compact`` when
     the delta or tombstone set has grown past broadcast comfort."""
-    centroids = [
-        (int(r["cid"]), list(r["ce"]))
-        for r in spark.table(table + "_centroids").collect()
-    ]
-    centroids.sort(key=lambda t: t[0])
+    centroids = _read_table_centroids(spark, table)
     gen = _table_gen(spark, table) + 1
-    assign_udf, _ = _np_quantizer_udfs(centroids, 1)
-    v = (
-        vectors.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("nv"),
-        )
-        .withColumn("cid", assign_udf(F.col("nv")))
-        .withColumn("gen", F.lit(gen).cast("long"))
-    )
+    v = _assign_batch(vectors, centroids, id_col, vec_col, gen)
     if replace:
-        _companion_write(
-            spark,
-            table,
-            "_tombstones",
-            vectors.select(
-                F.col(id_col).cast("long").alias("id"),
-                F.lit(gen - 1).cast("long").alias("gen_cut"),
-            ).coalesce(1),
+        _write_tombstones(
+            spark, vectors, gen - 1, _table_tombstone_append(spark, table), id_col
         )
     v = v.persist()
-    # gen row BEFORE the delta append (ADVICE r5): a crash between the
-    # two then under-serves a generation number (the recorded gen has
-    # no rows yet — harmless; the next upsert takes gen+1), where the
-    # old order left served delta rows stamped one generation AHEAD of
-    # the recorded gen, silently shielded from a subsequent delete's
-    # cut until another upsert bumped the counter. Same ordering
-    # argument as the replace-path's tombstone-first rule.
+    # gen row BEFORE the delta append: a crash between the two leaves a
+    # recorded gen with no rows (harmless; the next upsert takes gen+1),
+    # never served rows stamped AHEAD of the recorded gen, which a
+    # delete's cut would miss. Same argument as tombstone-first.
     _companion_write(
-        spark, table, "_meta", spark.createDataFrame([(gen,)], "gen long")
+        spark, table, "_meta",
+        spark.range(0, 1, 1, 1).select(F.lit(gen).cast("long").alias("gen")),
     )
     _companion_write(spark, table, "_delta", v)
     # append the batch's per-list counts to the size stats (one
@@ -1180,17 +1209,12 @@ def ivf_table_delete(spark, table: str, ids) -> int:
     """Tombstone ids in a ``build_ivf_table`` layout — no bucket files
     are touched; both the buckets and the delta are filtered at read
     time. The cut is the current generation, so later re-adds of the
-    same id (higher gen) survive. Returns the tombstoned-id count."""
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(int(i),) for i in ids], "id long")
-    gen = _table_gen(spark, table)
-    first = ids.columns[0]
-    out = ids.select(
-        F.col(first).cast("long").alias("id"),
-        F.lit(gen).cast("long").alias("gen_cut"),
+    same id (higher gen) survive. ids: a one-column DataFrame or an
+    iterable of ints. Returns the tombstone rows written (a duplicate
+    id counts each time), observed on the tombstone write."""
+    return _write_tombstones(
+        spark, ids, _table_gen(spark, table), _table_tombstone_append(spark, table)
     )
-    _companion_write(spark, table, "_tombstones", out.coalesce(1))
-    return out.count()
 
 
 def ivf_table_compact(spark, table: str) -> int:
@@ -1231,31 +1255,31 @@ def ivf_table_compact(spark, table: str) -> int:
         .bucketBy(num_buckets, "cid")
         .saveAsTable(table)
     )
-    n = spark.table(table).count()
     for companion in ("_delta", "_tombstones"):
         _drop_companion(spark, table, companion)
     # exact per-list counts of the compacted table (resets the
-    # physical-count upper bound to truth)
-    _drop_companion(spark, table, "_sizes")
-    _companion_write(
-        spark,
-        table,
-        "_sizes",
-        spark.table(table)
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .coalesce(1),
-    )
+    # physical-count upper bound to truth); their sum is the live count
+    n = _reset_table_sizes(spark, table)
     fs, jstaging = _fs_for(spark, staging)
     fs.delete(jstaging, True)
     return n
 
 
 def _read_index_meta(spark, index_path: str) -> dict:
-    fs, jpath = _fs_for(spark, index_path.rstrip("/") + "/_ivf_meta.json")
+    """The ``_ivf_meta.json`` generation record, which build and compact
+    always write; ValueError when missing (a guessed gen 0 hides nothing)."""
+    path = index_path.rstrip("/") + "/_ivf_meta.json"
+    fs, jpath = _fs_for(spark, path)
     if not fs.exists(jpath):
-        return {"gen": 0}
-    return _sidecar_read(spark, index_path.rstrip("/") + "/_ivf_meta.json")
+        raise ValueError(f"{index_path} has no _ivf_meta.json; rebuild it "
+                         "with build_ivf_index")
+    return _sidecar_read(spark, path)
+
+
+def _index_tombstone_append(index_path: str):
+    """A ``_write_tombstones`` writer: append under ``<index>/_tombstones``."""
+    path = index_path.rstrip("/") + "/_tombstones"
+    return lambda t: t.write.mode("append").parquet(path)
 
 
 def _read_index_rows(spark, index_path: str) -> DataFrame:
@@ -1274,16 +1298,7 @@ def _read_index_rows(spark, index_path: str) -> DataFrame:
     fs, tpath = _fs_for(spark, index_path.rstrip("/") + "/_tombstones")
     if fs.exists(tpath):
         t = spark.read.parquet(index_path.rstrip("/") + "/_tombstones")
-        cut = t.groupBy(F.col("id").alias("t_id")).agg(
-            F.max("gen_cut").alias("t_cut")
-        )
-        v = (
-            v.join(
-                F.broadcast(cut), v.neighbor_id == F.col("t_id"), "left"
-            )
-            .filter(F.col("t_cut").isNull() | (F.col("gen") > F.col("t_cut")))
-            .drop("t_id", "t_cut")
-        )
+        v = _apply_tombstone_cut(v, _tombstone_cut(t))
     return v
 
 
@@ -1309,41 +1324,24 @@ def ivf_index_upsert(
     replace=True also tombstones the incoming ids at the PREVIOUS
     generation (derived from the batch itself — the corpus is never
     scanned), so any older copy of an id is dead while the new row
-    survives. Returns the new generation number."""
+    survives. Returns the new generation number. An index without its
+    ``_ivf_meta.json`` generation record raises ValueError, unwritten."""
     centroids = _read_index_centroids(spark, index_path)
-    base = spark.read.parquet(index_path)
-    if "gen" not in base.columns:
-        raise ValueError(
-            "ivf_index_upsert needs a generation-stamped index "
-            "(rebuild with build_ivf_index >= round 5)"
-        )
     gen = int(_read_index_meta(spark, index_path)["gen"]) + 1
-    assign_udf, _ = _np_quantizer_udfs(centroids, 1)
-    v = (
-        vectors.select(
-            F.col(id_col).cast("long").alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("nv"),
-        )
-        .withColumn("cid", assign_udf(F.col("nv")))
-        .withColumn("gen", F.lit(gen).cast("long"))
-    )
+    v = _assign_batch(vectors, centroids, id_col, vec_col, gen)
     if shuffle:
         v = v.repartition("cid")
     if replace:
         # tombstone FIRST: if the job dies between the two writes the
         # index under-serves (old copies already hidden) instead of
         # double-serving an id
-        vectors.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.lit(gen - 1).cast("long").alias("gen_cut"),
-        ).coalesce(1).write.mode("append").parquet(
-            index_path.rstrip("/") + "/_tombstones"
+        _write_tombstones(
+            spark, vectors, gen - 1, _index_tombstone_append(index_path), id_col
         )
     v = v.persist()
-    # gen sidecar BEFORE the row append (the table variant's ADVICE r5
-    # ordering, applied here too): a crash between them under-serves a
-    # gen number instead of leaving served rows stamped ahead of the
-    # recorded gen (undeletable until the next successful upsert).
+    # gen sidecar BEFORE the row append (ivf_table_upsert's ordering):
+    # a crash between them leaves a gen with no rows, never rows ahead
+    # of the recorded gen (undeletable until the next upsert).
     _sidecar_write(
         spark, index_path.rstrip("/") + "/_ivf_meta.json", {"gen": gen}
     )
@@ -1370,19 +1368,13 @@ def ivf_index_delete(spark, index_path: str, ids) -> int:
     are touched (parquet is immutable; the read path filters). ids: a
     one-column DataFrame or an iterable of ints. The cut is the
     CURRENT generation, so rows appended later (higher gen) with the
-    same id are unaffected. Returns the tombstoned-id count."""
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(int(i),) for i in ids], "id long")
-    gen = int(_read_index_meta(spark, index_path)["gen"])
-    first = ids.columns[0]
-    out = ids.select(
-        F.col(first).cast("long").alias("id"),
-        F.lit(gen).cast("long").alias("gen_cut"),
+    same id are unaffected. Returns the tombstone rows written (a
+    duplicate id counts each time), observed on the tombstone write.
+    An index without ``_ivf_meta.json`` raises ValueError, unwritten."""
+    return _write_tombstones(
+        spark, ids, int(_read_index_meta(spark, index_path)["gen"]),
+        _index_tombstone_append(index_path),
     )
-    out.coalesce(1).write.mode("append").parquet(
-        index_path.rstrip("/") + "/_tombstones"
-    )
-    return out.count()
 
 
 def ivf_index_compact(spark, index_path: str, shuffle: bool = True) -> int:
@@ -1409,13 +1401,13 @@ def ivf_index_compact(spark, index_path: str, shuffle: bool = True) -> int:
     )
     # exact list sizes of the compacted (live-rows-only) table — the
     # moment the physical-count upper bound resets to truth
-    _write_index_sizes(spark, tmp, _scan_list_sizes(spark, tmp))
-    n = spark.read.parquet(tmp).count()
+    sizes = _scan_list_sizes(spark, tmp)
+    _write_index_sizes(spark, tmp, sizes)
     fs, old = _fs_for(spark, index_path.rstrip("/"))
     _, new = _fs_for(spark, tmp)
     fs.delete(old, True)
     fs.rename(new, old)
-    return n
+    return sum(sizes.values())
 
 
 def knn_ivf_join(

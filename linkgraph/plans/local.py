@@ -121,12 +121,21 @@ def index_of(sorted_ids: np.ndarray, keys) -> tuple[np.ndarray, np.ndarray]:
     return pos, hit
 
 
+def _names(schema: str) -> list[str]:
+    return [c.strip().split()[0] for c in schema.split(",")]
+
+
+def records(spark: SparkSession, schema: str, rows: list[dict]) -> DataFrame:
+    """``frame`` over dict rows, each keyed by ``schema``'s column names."""
+    return frame(spark, schema, **{k: [r[k] for r in rows] for k in _names(schema)})
+
+
 def frame(spark: SparkSession, schema: str, **columns) -> DataFrame:
     """A lazy frame over driver-held arrays (one Arrow createDataFrame;
     the columns follow ``schema``'s order)."""
     import pandas as pd
 
-    names = [c.strip().split()[0] for c in schema.split(",")]
+    names = _names(schema)
     if not len(columns[names[0]]):
         return spark.createDataFrame([], schema)
     return spark.createDataFrame(

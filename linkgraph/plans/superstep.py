@@ -37,6 +37,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from linkgraph.plans import local
+
 
 # localCheckpoint leaves its backing RDD persisted (DataFrame.unpersist
 # does NOT free it) — over hundreds of supersteps that is an
@@ -268,30 +270,18 @@ class SuperstepRunner:
         """Persist per-partition lineage rows (north_rule F6 schema)."""
         if not self.lineage:
             return
-        df = self.spark.createDataFrame(
-            [
-                (r["run_id"], int(r["superstep"]), int(r["partition_id"]), int(r["rows"]))
-                for r in self.lineage
-            ],
-            schema="run_id string, superstep int, partition_id int, rows long",
-        )
-        df.write.mode("append").parquet(path)
+        local.records(
+            self.spark,
+            "run_id string, superstep int, partition_id int, rows long",
+            self.lineage,
+        ).write.mode("append").parquet(path)
 
     def write_metrics(self, path: str) -> None:
         """Persist the metrics log (reference timer-tree analog)."""
         if not self.metrics:
             return
-        df = self.spark.createDataFrame(
-            [
-                (
-                    m["run_id"],
-                    int(m["superstep"]),
-                    float(m["seconds"]),
-                    float(m["delta"]),
-                    bool(m["converged"]),
-                )
-                for m in self.metrics
-            ],
-            schema="run_id string, superstep int, seconds double, delta double, converged boolean",
-        )
-        df.write.mode("append").parquet(path)
+        local.records(
+            self.spark,
+            "run_id string, superstep int, seconds double, delta double, converged boolean",
+            self.metrics,
+        ).write.mode("append").parquet(path)

@@ -14,6 +14,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from linkgraph.plans import local
 from linkgraph.streaming import stream_driver as sd
 
 
@@ -39,17 +40,16 @@ def _persist_phase(spark, checkpoint_dir, row: dict, res, state, write_trees) ->
     naming it — the resume point (edge versions are replayed from the
     deltas, never checkpointed)."""
     ts, phase = int(row["ts"]), row["phase"]
-    spark.createDataFrame(
-        [(ts, phase, int(row["r_size"]), float(row["r_frac"]), float(row["q"]))],
-        "ts int, phase string, r_size long, r_frac double, q double",
+    local.records(
+        spark, "ts int, phase string, r_size long, r_frac double, q double", [row]
     ).write.mode("append").parquet(os.path.join(checkpoint_dir, "incremental_metrics"))
     rounds = [
-        (ts, phase, int(m["level"]), int(m["round"]), float(m["q"]), float(m["gain"]))
+        {"ts": ts, "phase": phase, **m}
         for m in (res.metrics if res else []) if "round" in m
     ]
     if rounds:
-        spark.createDataFrame(
-            rounds, "ts int, phase string, level int, round int, q double, gain double"
+        local.records(
+            spark, "ts int, phase string, level int, round int, q double, gain double", rounds
         ).write.mode("append").parquet(os.path.join(checkpoint_dir, "louvain_rounds"))
     key = f"ts={ts}_phase={phase}"
     if write_trees:

@@ -801,3 +801,197 @@ def test_table_sizes_maintained_by_upsert_and_compact(spark, vectors, tmp_path):
     assert s == truth
     for t in ("t_ivf_szm", "t_ivf_szm_centroids", "t_ivf_szm_sizes"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _run_jobs(spark, group: str, fn):
+    """(fn(), the number of Spark jobs it ran); ``group`` must be fresh."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        sc.setJobGroup(None, None)
+    return out, len(jobs)
+
+
+def _batch(spark, first_id: int, n: int, seed: int):
+    rng = np.random.default_rng(seed)
+    return spark.createDataFrame(
+        [(first_id + i, rng.standard_normal(16).tolist()) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    ).persist()
+
+
+def _drop_ivf_table(spark, table: str) -> None:
+    for t in ("", "_centroids", "_sizes", "_delta", "_tombstones", "_meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {table}{t}")
+
+
+def test_ivf_write_calls_job_budget_and_counts(spark, vectors, tmp_path):
+    """Each maintenance write moves its batch through Spark once: no
+    parquet schema probe in the index upsert, one scan for the table's
+    gen, no recount after a tombstone write. The per-call job counts on
+    a small store are upper bounds here. Each delete returns the
+    tombstone rows it wrote, a duplicate id counted each time, for a
+    list, a one-column DataFrame and an empty list."""
+    from linkgraph.functions.similarity import (
+        _read_index_rows, build_ivf_index, build_ivf_table, ivf_index_delete,
+        ivf_index_upsert, ivf_table_delete, ivf_table_upsert)
+
+    _drop_ivf_table(spark, "t_ivf_bud")
+    cents = build_ivf_table(
+        vectors, "t_ivf_bud", str(tmp_path / "bud_tbl"), n_centroids=4)
+    idx = str(tmp_path / "bud_idx")
+    build_ivf_index(vectors, idx, centroids=cents)
+    newv = _batch(spark, 500, 10, 41)
+    newv.count()
+
+    calls = {
+        "index-upsert": (lambda: ivf_index_upsert(spark, idx, newv), 1, 4),
+        "table-upsert": (lambda: ivf_table_upsert(spark, "t_ivf_bud", newv), 1, 6),
+        "index-delete": (lambda: ivf_index_delete(spark, idx, [3, 3, 5]), 3, 1),
+        "table-delete": (
+            lambda: ivf_table_delete(spark, "t_ivf_bud", [3, 3, 5]), 3, 2),
+    }
+    for name, (call, want, budget) in calls.items():
+        got, jobs = _run_jobs(spark, f"ivf-budget-{name}", call)
+        assert got == want, (name, got)
+        assert jobs <= budget, (name, jobs)
+    newv.unpersist()
+
+    ids_df = spark.createDataFrame([(6,), (7,)], "doc long")
+    assert ivf_index_delete(spark, idx, ids_df) == 2
+    assert ivf_table_delete(spark, "t_ivf_bud", ids_df) == 2
+    assert ivf_index_delete(spark, idx, []) == 0
+    assert ivf_table_delete(spark, "t_ivf_bud", []) == 0
+    live = {r.neighbor_id for r in _read_index_rows(spark, idx).collect()}
+    assert live == (set(range(40)) | set(range(500, 510))) - {3, 5, 6, 7}
+    _drop_ivf_table(spark, "t_ivf_bud")
+
+
+def test_ivf_index_without_meta_raises(spark, vectors, tmp_path):
+    """A path index without its _ivf_meta.json generation record is
+    refused by upsert and delete before anything is written: a guessed
+    gen 0 would give a delete a cut that misses every upserted row."""
+    import os
+
+    from linkgraph.functions.similarity import (
+        build_ivf_index, ivf_index_delete, ivf_index_upsert)
+
+    idx = str(tmp_path / "ivf_nometa")
+    build_ivf_index(vectors, idx, n_centroids=4)
+    os.remove(os.path.join(idx, "_ivf_meta.json"))
+    with pytest.raises(ValueError, match="_ivf_meta.json"):
+        ivf_index_upsert(spark, idx, vectors.filter(F.col("vec_id") < 2))
+    with pytest.raises(ValueError, match="_ivf_meta.json"):
+        ivf_index_delete(spark, idx, [1])
+    assert not os.path.exists(os.path.join(idx, "_tombstones"))
+    assert not os.path.exists(os.path.join(idx, "_ivf_meta.json"))
+
+
+def test_ivf_index_upsert_crash_after_gen_record(
+        spark, vectors, tmp_path, monkeypatch):
+    """Crash injection on the path index: the partitioned row append
+    dies after the gen sidecar is written. The recorded gen has moved
+    on with no rows, none of the batch is served, the next upsert takes
+    the next gen and a later delete still hides its ids. With
+    replace=True the tombstone lands first, so the crash hides the old
+    copies and no id is ever served twice."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from linkgraph.functions.similarity import (
+        _read_index_meta, _read_index_rows, build_ivf_index,
+        ivf_index_delete, ivf_index_upsert)
+
+    idx = str(tmp_path / "ivf_crash")
+    build_ivf_index(vectors, idx, n_centroids=4)
+    parquet = DataFrameWriter.parquet
+
+    def crash_on_row_append(self, path, *a, **kw):
+        if path.rstrip("/") == idx:
+            raise RuntimeError("injected crash")
+        return parquet(self, path, *a, **kw)
+
+    def upsert_crashes(batch, replace):
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", crash_on_row_append)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                ivf_index_upsert(spark, idx, batch, replace=replace)
+
+    def served():
+        ids = [r.neighbor_id for r in
+               _read_index_rows(spark, idx).select("neighbor_id").collect()]
+        assert len(ids) == len(set(ids)), "an id is served twice"
+        return set(ids)
+
+    batch = _batch(spark, 300, 5, 31)
+    upsert_crashes(batch, replace=False)
+    assert _read_index_meta(spark, idx)["gen"] == 1
+    assert not served() & set(range(300, 305))
+    assert ivf_index_upsert(spark, idx, batch) == 2
+    assert ivf_index_delete(spark, idx, [300, 301]) == 2
+    assert served() == (set(range(40)) | {302, 303, 304})
+
+    again = vectors.filter(F.col("vec_id") < 3)
+    upsert_crashes(again, replace=True)
+    assert _read_index_meta(spark, idx)["gen"] == 3
+    assert served() == (set(range(3, 40)) | {302, 303, 304})
+    assert ivf_index_upsert(spark, idx, again, replace=True) == 4
+    assert served() == (set(range(40)) | {302, 303, 304})
+    batch.unpersist()
+
+
+def test_ivf_table_upsert_crash_after_gen_record(
+        spark, vectors, tmp_path, monkeypatch):
+    """Crash injection on the bucketed table: the ``_delta`` append dies
+    after the ``_meta`` gen row is written. Same contract as the path
+    index, read through knn_ivf_join_table with every list probed and
+    k above the corpus size, so each query is served the whole live
+    set: the failed batch is never served, the next upsert takes the
+    next gen, a later delete hides its ids, and after a replace=True
+    crash the old copies are hidden and no id is served twice."""
+    import linkgraph.functions.similarity as sim
+
+    _drop_ivf_table(spark, "t_ivf_crash")
+    sim.build_ivf_table(
+        vectors, "t_ivf_crash", str(tmp_path / "crash_tbl"), n_centroids=4)
+    write = sim._companion_write
+
+    def crash_on_delta(spark_, table, suffix, df):
+        if suffix == "_delta":
+            raise RuntimeError("injected crash")
+        return write(spark_, table, suffix, df)
+
+    def upsert_crashes(batch, replace):
+        with monkeypatch.context() as m:
+            m.setattr(sim, "_companion_write", crash_on_delta)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                sim.ivf_table_upsert(spark, "t_ivf_crash", batch, replace=replace)
+
+    # a query id outside the corpus: no served row is dropped as "self"
+    probe = vectors.filter(F.col("vec_id") == 10).select(
+        (F.col("vec_id") + 10**6).alias("vec_id"), "embedding")
+
+    def served():
+        ids = [r.neighbor_id for r in sim.knn_ivf_join_table(
+            spark, "t_ivf_crash", probe, k=100, n_probe=4).collect()]
+        assert len(ids) == len(set(ids)), "an id is served twice"
+        return set(ids)
+
+    batch = _batch(spark, 300, 5, 37)
+    upsert_crashes(batch, replace=False)
+    assert sim._table_gen(spark, "t_ivf_crash") == 1
+    assert not served() & set(range(300, 305))
+    assert sim.ivf_table_upsert(spark, "t_ivf_crash", batch) == 2
+    assert sim.ivf_table_delete(spark, "t_ivf_crash", [300, 301]) == 2
+    assert served() == (set(range(40)) | {302, 303, 304})
+
+    again = vectors.filter(F.col("vec_id") < 3)
+    upsert_crashes(again, replace=True)
+    assert sim._table_gen(spark, "t_ivf_crash") == 3
+    assert served() == (set(range(3, 40)) | {302, 303, 304})
+    assert sim.ivf_table_upsert(spark, "t_ivf_crash", again, replace=True) == 4
+    assert served() == (set(range(40)) | {302, 303, 304})
+    batch.unpersist()
+    _drop_ivf_table(spark, "t_ivf_crash")
